@@ -1018,12 +1018,16 @@ object TextAnalysis {
     * sentinels. Map-only: tokenize, three slices, one concat — no
     * shuffle, whole-stage-codegen'd.
     *
-    * Output: every input row plus `fim_applied` and `text_fim`. */
+    * Output: every input row plus `fim_applied` and `text_fim`. The input
+    * must not carry the temp columns `__fim_toks` or `__fim_us`. */
   def fimTransform(df: DataFrame, idCol: String, textCol: String,
       fimRate: Double = 0.5,
       preTok: String = "<fim_prefix>", sufTok: String = "<fim_suffix>",
       midTok: String = "<fim_middle>"): DataFrame = {
     require(fimRate >= 0 && fimRate <= 1)
+    // a caller's column of the same name would be replaced, then dropped
+    val temps = Seq("__fim_toks", "__fim_us").filter(df.columns.contains)
+    require(temps.isEmpty, s"fimTransform: input already has ${temps.mkString(", ")}")
     // md5-derived uniforms in [0,1): first 8 hex chars / 2^32. One
     // native pass computes all three salted draws (r17,
     // [[graft.functions.Md5SaltedUniforms]] — bit-identical to the

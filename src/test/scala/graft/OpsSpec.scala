@@ -3231,6 +3231,13 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("fimTransform: refuses an input that already carries one of its temp columns") {
+    val docs = Seq((1L, "a b c", 0.5)).toDF("doc_id", "text", "__fim_us")
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.fimTransform(docs, "doc_id", "text", fimRate = 1.0))
+    assert(e.getMessage.contains("__fim_us"))
+  }
+
   test("trainHashedLogReg: loss strictly decreases, gate separates the planted classes") {
     import spark.implicits._
     // the x88 fixture shape: 12-token truncation keeps full-batch GD

@@ -24,9 +24,13 @@ class QualityPropertiesSpec extends SparkSpec {
   test("property: k duplicated rows => duplicate_count == k (total - distinct)") {
     ks.foreach { k =>
       val base = Seq.tabulate(25)(i => s"key$i")
-      val r = DataQuality.checkDuplicates(
-        (base ++ Seq.fill(k)("key0")).toDF("key"), Seq("key"))
+      val df = (base ++ Seq.fill(k)("key0")).toDF("key")
+      val r = DataQuality.checkDuplicates(df, Seq("key"))
       assert(r.duplicateCount == k.toLong, s"k=$k")
+      // runAllChecks' fused count agrees with the grouped reference
+      val fused = DataQuality.runAllChecks(df,
+        DataQuality.QualityConfig(keyColumns = Seq("key"))).duplicateCheck.get
+      assert(fused == r, s"k=$k")
     }
   }
 

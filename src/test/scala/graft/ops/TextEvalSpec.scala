@@ -615,4 +615,25 @@ class TextEvalSpec extends SparkSpec {
     assert(got(1) == "a d" && got(5) == "a b c" && got(6) == "" &&
       got(7) == "" && got(8) == "b" && got(9) == "a b" && got(10) == null)
   }
+
+  test("token_splice: a non-nullable splice compiles under a null-checking parent (CODEGEN_ONLY)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Coalesce, CreateArray,
+      Literal, UnsafeProjection}
+    import graft.functions.TokenSplice
+    // coalesce reads its child's isNull in generated code. Built as a bare
+    // expression: the optimizer would drop a coalesce whose first child is
+    // non-nullable. CODEGEN_ONLY turns a compile failure into an error
+    // instead of a silent fallback to interpretation.
+    val toks = CreateArray(Seq(Literal("a"), Literal("b"), Literal("c")))
+    val splice = TokenSplice(toks, CreateArray(Seq(Literal(1))))
+    assert(!splice.nullable)
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try {
+      val proj = UnsafeProjection.create(Seq(Coalesce(Seq(splice, Literal("x")))))
+      assert(proj(InternalRow.empty).getUTF8String(0).toString == "a c")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
