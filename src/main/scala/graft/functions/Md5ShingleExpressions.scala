@@ -181,10 +181,11 @@ case class Md5MinHashSigs(child: Expression, k: Int)
     val md = Md5Family.md5()
     val out = new Array[Long](k)
     // "j:" + decimal digits of the hash, written straight into one
-    // reused ASCII buffer (max prefix "63:" + max 19 digits) — the
-    // string-concat spelling allocated two Strings + an encode per
-    // (j, distinct-hash) digest in this n*k inner loop
-    val buf = new Array[Byte](24)
+    // reused ASCII buffer sized for any input: a 10-digit j, ':' and a
+    // 20-byte negative long — the string-concat spelling allocated two
+    // Strings + an encode per (j, distinct-hash) digest in this n*k
+    // inner loop
+    val buf = new Array[Byte](32)
     var j = 0
     while (j < k) {
       val pEnd0 = Md5Family.appendDigits(buf, 0, j.toLong)

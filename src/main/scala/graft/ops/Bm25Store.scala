@@ -120,19 +120,14 @@ object Bm25Store {
     TextAnalysis.tokens(lower(col(textCol)))
 
   private def writeMeta(spark: SparkSession, root: String,
-      p: Params): Unit = {
-    spark.range(1).select(lit(p.tokenizer).as("tokenizer"),
-      lit(p.nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("bm25", root, p)
-  }
+      p: Params): Unit =
+    ShardStore.writeMeta(spark, "bm25", metaPath(root), p)(
+      lit(p.tokenizer).as("tokenizer"), lit(p.nBuckets).as("n_buckets"))
 
-  /** The parameters this store was built with (memoized per root —
-    * [[StoreMeta]]: params are immutable between builds, so the
-    * per-call parquet read was one pure-overhead Spark execution). */
+  /** The parameters this store was built with (memoized per root until
+    * `meta/` is rewritten — [[ShardStore.cached]]). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("bm25", root) {
-      val r = spark.read.parquet(metaPath(root)).head()
+    ShardStore.readMeta(spark, "bm25", metaPath(root)) { r =>
       Params(r.getAs[String]("tokenizer"), r.getAs[Int]("n_buckets"))
     }
 
@@ -173,35 +168,26 @@ object Bm25Store {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val obsPost = new org.apache.spark.sql.Observation()
-      td.select(col("id"), size(col("__t")).cast("long").as("__dl"),
-          explode(col("__t")).as("term"))
-        .groupBy(col("id"), col("term"))
-        .agg(count(lit(1)).as("tf"), max(col("__dl")).as("dl"))
-        .observe(obsPost, count(lit(1)).as("n"))
-        .withColumn("ingest_shard", lit(shardId))
-        .withColumn("__bkt", bucketOf(p.nBuckets))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard", "__bkt")
-        .parquet(postingsPath(root))
+      ShardStore.write(
+        td.select(col("id"), size(col("__t")).cast("long").as("__dl"),
+            explode(col("__t")).as("term"))
+          .groupBy(col("id"), col("term"))
+          .agg(count(lit(1)).as("tf"), max(col("__dl")).as("dl"))
+          .observe(obsPost, count(lit(1)).as("n"))
+          .withColumn("__bkt", bucketOf(p.nBuckets)),
+        postingsPath(root), shardId, "__bkt")
       val obsTerms = new org.apache.spark.sql.Observation()
-      postingsRaw(spark, root)
-        .filter(col("ingest_shard") === lit(shardId))
-        .select(col("term"), col("__bkt")).distinct()
-        .observe(obsTerms, count(lit(1)).as("n"))
-        .withColumn("ingest_shard", lit(shardId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard", "__bkt")
-        .parquet(termsPath(root))
-      td.agg(count(lit(1)).as("n_docs"),
+      ShardStore.write(
+        postingsRaw(spark, root)
+          .filter(col("ingest_shard") === lit(shardId))
+          .select(col("term"), col("__bkt")).distinct()
+          .observe(obsTerms, count(lit(1)).as("n")),
+        termsPath(root), shardId, "__bkt")
+      ShardStore.write(
+        td.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(size(col("__t")).cast("long")), lit(0L))
-            .as("sum_dl"))
-        .withColumn("ingest_shard", lit(shardId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard")
-        .parquet(statsPath(root))
+            .as("sum_dl")),
+        statsPath(root), shardId)
       (obsPost.get("n").asInstanceOf[Long],
         obsTerms.get("n").asInstanceOf[Long])
     } finally td.unpersist(false)
@@ -399,70 +385,21 @@ object Bm25Store {
     * global rewrite). Under the id-uniqueness contract the fold is
     * pure concatenation; the (id, term) dedup exists ONLY for the
     * crash-leftover case where a prior attempt's tier survived
-    * alongside not-yet-deleted sources. `stats/` rows are deliberately
-    * NEVER compacted: they are O(#shards-ever) scalar rows (a decade
-    * of daily shards is ~3,650 rows), and folding additive scalars
-    * cannot be made crash-exact without a commit protocol — a crash
-    * between a folded row landing and its sources' deletion would
-    * double-count N — while leaving them in place costs nothing.
-    * Returns (posting shards before, after). */
+    * alongside not-yet-deleted sources. The `terms/` sidecar folds
+    * under the SAME tier name and manifest; its rows are a membership
+    * set, so a leftover source next to its tier only duplicates rows the
+    * probes distinct away. `stats/` rows are deliberately NEVER
+    * compacted: they are O(#shards-ever) scalar rows (a decade of daily
+    * shards is ~3,650 rows), and folding additive scalars cannot be
+    * made crash-exact without a commit protocol — a crash between a
+    * folded row landing and its sources' deletion would double-count N
+    * — while leaving them in place costs nothing. Crash protocol:
+    * [[ShardStore]]. Returns (posting shards before, after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val path = postingsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      postingsRaw(spark, root)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("id", "term")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' postings; just finish the deletion
-    // the terms/ sidecar folds under the SAME tier id; its rows are a
-    // membership set (cross-shard duplicates expected), so the crash
-    // windows are the CdcStore digest semantics — a leftover source
-    // next to the tier only duplicates rows the probes distinct away
-    val tdirPath = termsPath(root)
-    val tdir = new org.apache.hadoop.fs.Path(tdirPath)
-    val tTarget = new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$newId")
-    val tSources = sources.filter(s =>
-      fs.exists(new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$s")))
-    if (!fs.exists(tTarget) && tSources.nonEmpty) {
-      val stage = new org.apache.hadoop.fs.Path(tdirPath + "__compact_stage")
-      fs.delete(stage, true)
-      termsRaw(spark, root)
-        .filter(col("ingest_shard").isin(tSources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("term")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, tTarget), s"compact promote failed: $stage")
-    }
-    tSources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$s"), true)
-    }
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardStore.compact(spark, tierMaxBytes,
+      ShardStore.Table(postingsPath(root), postingsSchema,
+        _.dropDuplicates("id", "term"), Seq("__bkt")),
+      ShardStore.Table(termsPath(root), termsSchema,
+        _.dropDuplicates("term"), Seq("__bkt")))
 }

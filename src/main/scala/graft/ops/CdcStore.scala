@@ -90,21 +90,17 @@ object CdcStore {
   private def bucketOf(p: Params) =
     pmod(xxhash64(col("digest")), lit(p.nBuckets)).cast("int")
 
-  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit = {
-    spark.range(1).select(lit(p.family).as("family"),
-      lit(p.maskBits).as("mask_bits"), lit(p.k).as("k"),
-      lit(p.divisor).as("divisor"), lit(p.minLen).as("min_len"),
-      lit(p.maxLen).as("max_len"), lit(p.nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("cdc", root, p)
-  }
+  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit =
+    ShardStore.writeMeta(spark, "cdc", metaPath(root), p)(
+      lit(p.family).as("family"), lit(p.maskBits).as("mask_bits"),
+      lit(p.k).as("k"), lit(p.divisor).as("divisor"),
+      lit(p.minLen).as("min_len"), lit(p.maxLen).as("max_len"),
+      lit(p.nBuckets).as("n_buckets"))
 
-  /** The parameters this store was built with (memoized per root —
-    * [[StoreMeta]]: params are immutable between builds, so the
-    * per-call parquet read was one pure-overhead Spark execution). */
+  /** The parameters this store was built with (memoized per root until
+    * `meta/` is rewritten — [[ShardStore.cached]]). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("cdc", root) {
-      val r = spark.read.parquet(metaPath(root)).head()
+    ShardStore.readMeta(spark, "cdc", metaPath(root)) { r =>
       Params(r.getAs[String]("family"), r.getAs[Int]("mask_bits"),
         r.getAs[Int]("k"), r.getAs[Int]("divisor"), r.getAs[Int]("min_len"),
         r.getAs[Int]("max_len"), r.getAs[Int]("n_buckets"))
@@ -131,13 +127,10 @@ object CdcStore {
     * the shard-sized exchange; the bucket column is map-side. */
   private def writeShardDigests(chunks: DataFrame, path: String,
       shardId: String, p: Params): Unit =
-    chunks.filter(col("len") >= p.minLen).select(col("digest")).distinct()
-      .withColumn("ingest_shard", lit(shardId))
-      .withColumn("__bkt", bucketOf(p))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard", "__bkt")
-      .parquet(path)
+    ShardStore.write(
+      chunks.filter(col("len") >= p.minLen).select(col("digest")).distinct()
+        .withColumn("__bkt", bucketOf(p)),
+      path, shardId, "__bkt")
 
   private def digestsRaw(spark: SparkSession, root: String,
       p: Params): DataFrame =
@@ -273,49 +266,15 @@ object CdcStore {
   }
 
   /** Fold shard partitions at or under `tierMaxBytes` into one
-    * deduplicated tier partition (the family's size-tiered compaction:
-    * a daily small-shard tail compacts in shard-sized time, the
-    * accumulated base partition is untouched; default = global
-    * full rewrite). Crash-safe via the deterministic tier name: a
-    * re-run after the rename-done crash window finds the target and
-    * finishes source deletion instead of re-reading. Returns (shards
-    * before, shards after). */
+    * deduplicated tier partition (size-tiered: a daily small-shard tail
+    * compacts in shard-sized time, the accumulated base partition is
+    * untouched; default = global full rewrite). The fold dedups on the
+    * digest, so a leftover copy next to its tier is absorbed by the next
+    * run that reads both. Crash protocol: [[ShardStore]]. Returns
+    * (shards before, shards after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val p = readMeta(spark, root)
-    val path = digestsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      digestsRaw(spark, root, p)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("digest")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' digests; just finish the deletion
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardStore.compact(spark, tierMaxBytes,
+      ShardStore.Table(digestsPath(root), digestsSchema(readMeta(spark, root)),
+        _.dropDuplicates("digest"), Seq("__bkt")))
 }

@@ -74,10 +74,9 @@ import org.apache.spark.sql.types._
   * [[retractionsForShard]] emits the evidence feed that reconciles
   * downstream consumers.
   *
-  * SINGLE-WRITER CONTRACT: one ingest at a time (same as
-  * [[IncrementalDedup]]) — concurrent writers would interleave
-  * dynamic partition overwrites. Requires ids globally unique across
-  * shards and totally ordered (canonical selection is min (id, pos)).
+  * Single writer ([[ShardStore]]'s contract). Requires ids globally
+  * unique across shards and totally ordered (canonical selection is
+  * min (id, pos)).
   *
   * Reference behavior: Lee et al. '22 ("Deduplicating Training Data
   * Makes Language Models Better"), ExactSubstr; windowing per
@@ -111,30 +110,24 @@ object ExactSubstrStore {
   private def bucketOf(p: Params) =
     pmod(xxhash64(col("__gk")), lit(p.nBuckets)).cast("int")
 
-  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit = {
-    spark.range(1).select(
+  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit =
+    ShardStore.writeMeta(spark, "exsub", metaPath(root), p)(
       lit(p.minLen).as("min_len"), lit(p.digestKeys).as("digest_keys"),
       lit(p.nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("exsub", root, p)
-  }
 
   /** The parameters this index was built with (probes must match them;
-    * memoized per root — [[StoreMeta]]: params are immutable between
-    * builds, so the per-call parquet read was one pure-overhead Spark
-    * execution per probe/ingest).
+    * memoized per root until `meta/` is rewritten —
+    * [[ShardStore.cached]]).
     * Refuses a v1 (pre-bucket) index: its `windows/` has no `__bkt`
     * subdirectories, so every v2 read would silently see null buckets. */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("exsub", root) {
-    val df = spark.read.parquet(metaPath(root))
-    require(df.columns.contains("n_buckets"),
-      s"$root is a v1 (pre-key-bucketing) ExactSubstr index; rebuild it " +
-        "with buildIndex — the v2 probe prunes by __bkt subdirectory")
-    val r = df.head()
-    Params(r.getAs[Int]("min_len"), r.getAs[Boolean]("digest_keys"),
-      r.getAs[Int]("n_buckets"))
-  }
+    ShardStore.readMeta(spark, "exsub", metaPath(root)) { r =>
+      require(r.schema.fieldNames.contains("n_buckets"),
+        s"$root is a v1 (pre-key-bucketing) ExactSubstr index; rebuild it " +
+          "with buildIndex — the v2 probe prunes by __bkt subdirectory")
+      Params(r.getAs[Int]("min_len"), r.getAs[Boolean]("digest_keys"),
+        r.getAs[Int]("n_buckets"))
+    }
 
   /** Land `df` (__gk, id, pos) as the named shard's partition,
     * bucketed map-side — the bucket column is computed per row, never
@@ -143,12 +136,8 @@ object ExactSubstrStore {
     * so each task streams its buckets one open file at a time). */
   private def writeShardPartition(df: DataFrame, path: String,
       shardId: String, p: Params): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .withColumn("__bkt", bucketOf(p))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard", "__bkt")
-      .parquet(path)
+    ShardStore.write(df.withColumn("__bkt", bucketOf(p)), path, shardId,
+      "__bkt")
 
   /** (id, pos, __gk) anchor windows of `docs` — the batch operator's
     * span frame, bit-identical keying (same tokenizer, same gram
@@ -408,75 +397,30 @@ object ExactSubstrStore {
   /** Consolidate accumulated per-shard partitions of `windows/` — the
     * file-count hygiene a continuously-ingesting store needs (daily
     * shards for a year = 365 partition dirs whose listing and footer
-    * reads tax every probe), now SIZE-TIERED: only shards whose
-    * partition is at most `tierMaxBytes` are absorbed, so a mature
-    * store compacts its tail of small daily shards into a tier WITHOUT
-    * rewriting the accumulated base every time (the default ∞ keeps
-    * the original compact-everything behavior). The [[IncrementalDedup
-    * .compactShards]] protocol, sharpened twice for this store:
+    * reads tax every probe), SIZE-TIERED: only shards whose partition is
+    * at most `tierMaxBytes` are absorbed, so a mature store compacts its
+    * tail of small daily shards into a tier WITHOUT rewriting the
+    * accumulated base every time (the default ∞ compacts everything).
+    * Crash protocol and tier naming: [[ShardStore]].
     *
-    *  - duplicated window rows INFLATE counts (a unique span would read
-    *    as duplicated), so the consolidation dedups on the full
-    *    (gk, id, pos) row — a compact-everything re-run after any crash
-    *    absorbs and repairs leftovers;
-    *  - the consolidated partition's name is DETERMINISTIC on the
-    *    absorbed source set, so a re-run after the crash window
-    *    (rename done, source deletion incomplete) DETECTS the completed
-    *    rename — target partition already present — and just finishes
-    *    deleting the sources instead of double-counting them. This is
-    *    what makes the tiered mode crash-safe: the leftover sources and
-    *    the new tier never need to be re-read together.
-    *
-    * Cross-tier duplicate rows (possible only through interference no
-    * single-writer history produces) are repaired by a compact-
-    * everything run, not a tiered one — tiered legs read only their
-    * sources. Only compact shards whose ingest has COMPLETED: the
+    * Duplicated window rows INFLATE counts (a unique span would read as
+    * duplicated), so the consolidation dedups on the full (gk, id, pos)
+    * row — a compact-everything re-run after any crash absorbs and
+    * repairs leftovers. Cross-tier duplicate rows are repaired by a
+    * compact-everything run, not a tiered one — tiered legs read only
+    * their sources. Only compact shards whose ingest has COMPLETED: the
     * consolidated partition no longer matches their shard id, so a
     * later [[addShard]] replay under an absorbed id would count its
     * windows twice (and a post-compaction [[retractionsForShard]] for
-    * an absorbed id reads an empty partition — same contract as v1).
-    * Single writer, same as ingest. The bucket subdirectories are
-    * preserved (`__bkt` rides the read and the staged write), so
-    * probe pruning is unaffected. Returns (partitions before,
+    * an absorbed id reads an empty partition). The bucket
+    * subdirectories are preserved (`__bkt` rides the read and the staged
+    * write), so probe pruning is unaffected. Returns (partitions before,
     * partitions after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val p = readMeta(spark, root)
-    val path = windowsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      windowsRaw(spark, root, p)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("__gk", "id", "pos")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' rows; just finish the deletion
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardStore.compact(spark, tierMaxBytes,
+      ShardStore.Table(windowsPath(root), windowsSchema(readMeta(spark, root)),
+        _.dropDuplicates("__gk", "id", "pos"), Seq("__bkt")))
 
   /** The batch operator's coverage stage over an externally supplied
     * window/dup-state pair: (id, p, protected) for every position of

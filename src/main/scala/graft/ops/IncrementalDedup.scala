@@ -73,9 +73,8 @@ import org.apache.spark.sql.functions._
   * time, and [[republishDelta]] emits the (id, old_cluster, new_cluster)
   * retraction feed that reconciles downstream consumers after merges.
   *
-  * SINGLE-WRITER CONTRACT: one ingest (or [[compactShards]]) at a time —
-  * concurrent writers would race the label swap and interleave partition
-  * overwrites. Serialize upstream (the streaming sink's micro-batch loop
+  * Single writer ([[ShardStore]]'s contract): serialize ingests and
+  * [[compactShards]] upstream (the streaming sink's micro-batch loop
   * does this naturally).
   */
 object IncrementalDedup {
@@ -147,32 +146,17 @@ object IncrementalDedup {
           Dedup.lshBandHashes(col("sig"), p.k, p.bands))).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
 
-  /** Idempotent shard append: dynamic partition overwrite replaces exactly
-    * this shard's directory, leaving every other shard's files untouched. */
-  private def writeShardPartition(df: DataFrame, path: String,
-      shardId: String): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard")
-      .parquet(path)
-
-  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit = {
-    spark.range(1).select(
+  private def writeMeta(spark: SparkSession, root: String, p: Params): Unit =
+    ShardStore.writeMeta(spark, "incdedup", metaPath(root), p)(
       lit(p.shingleW).as("shingle_w"), lit(p.k).as("k"),
       lit(p.bands).as("bands"), lit(p.threshold).as("threshold"),
       lit(p.maxBucket).as("max_bucket"))
-      .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("incdedup", root, p)
-  }
 
   /** The parameters this index was built with (probes must match them;
-    * memoized per root — [[StoreMeta]]: params are immutable between
-    * builds, so the per-call parquet read was one pure-overhead Spark
-    * execution per ingest). */
+    * memoized per root until `meta/` is rewritten —
+    * [[ShardStore.cached]]). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("incdedup", root) {
-      val r = spark.read.parquet(metaPath(root)).head()
+    ShardStore.readMeta(spark, "incdedup", metaPath(root)) { r =>
       Params(r.getAs[Int]("shingle_w"), r.getAs[Int]("k"),
         r.getAs[Int]("bands"), r.getAs[Double]("threshold"),
         r.getAs[Int]("max_bucket"))
@@ -288,11 +272,11 @@ object IncrementalDedup {
       .select(col("id_a"), col("id_b"))
     val labels = Dedup.resolveClusters(pairs)
     graft.bench.StageTimers.time("incdedup.build_writes") {
-      writeShardPartition(buckets, bucketsPath(root), shardId)
+      ShardStore.write(buckets, bucketsPath(root), shardId)
       // sig-less docs are not index state (they can never pair)
-      writeShardPartition(sh.filter(size(col("sh")) > 0),
+      ShardStore.write(sh.filter(size(col("sh")) > 0),
         shinglesPath(root), shardId)
-      writeShardPartition(labels, labelsPath(root), shardId)
+      ShardStore.write(labels, labelsPath(root), shardId)
       writeMeta(spark, root, p)
     }
     // report from the in-memory (checkpointed) labels, NOT a re-read of
@@ -477,10 +461,10 @@ object IncrementalDedup {
     cand.unpersist()
     cleanup()
     graft.bench.StageTimers.time("incdedup.shard_writes") {
-      writeShardPartition(buckets2, bucketsPath(root), shardId)
-      writeShardPartition(sh2.filter(size(col("sh")) > 0),
+      ShardStore.write(buckets2, bucketsPath(root), shardId)
+      ShardStore.write(sh2.filter(size(col("sh")) > 0),
         shinglesPath(root), shardId)
-      writeShardPartition(delta, labelsPath(root), shardId)
+      ShardStore.write(delta, labelsPath(root), shardId)
     }
     // report from the in-memory resolution: it covers every shard doc
     // that entered a pair; the rest survive via the left-join miss
@@ -563,20 +547,9 @@ object IncrementalDedup {
     * would see no published-label rows, fall back to `old_cluster = id`,
     * and silently emit a spurious retraction for every non-root published
     * doc. One driver-side directory listing per table, no data read. */
-  private def liveShardIds(spark: SparkSession, root: String): Set[String] = {
-    def list(path: String): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).iterator
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-        .toSet
-    }
-    list(bucketsPath(root)) ++ list(shinglesPath(root)) ++
-      list(labelsPath(root))
-  }
+  private def liveShardIds(spark: SparkSession, root: String): Set[String] =
+    Seq(bucketsPath(root), shinglesPath(root), labelsPath(root))
+      .flatMap(ShardStore.shards(spark, _)).toSet
 
   /** Fail fast when a retraction feed names shards [[compactShards]] has
     * already collapsed (the feed's answer is unreconstructable then — the
@@ -674,97 +647,38 @@ object IncrementalDedup {
       .filter(col("old_cluster") =!= col("new_cluster"))
   }
 
-  /** Index maintenance: consolidate all ingested shard partitions into ONE
-    * — after thousands of small-shard ingests the per-shard directories
-    * are exactly the small-files problem q51's compaction solves for data
-    * tables (every probe lists and opens per-shard files). Protocol:
-    * write the consolidated partition FIRST (its own fresh shard id, a
-    * dynamic overwrite touching nothing else), then delete the source
-    * shard directories. CRASH SAFETY BY DUPLICATE TOLERANCE, not
-    * atomicity: a death between the write and the deletes leaves some
-    * rows present twice (old shard dir + consolidated dir), and every
-    * read path is insensitive to that — candidate pairs are
-    * `.distinct()`ed, [[Dedup.resolveClusters]] is multiplicity-blind,
-    * and duplicated shingle rows only duplicate verify pairs the same
-    * distinct/resolve steps absorb — and on top of that the consolidated
-    * rewrite DEDUPLICATES rows (exact-key for buckets/shingles, min-root
-    * aggregation for labels), so a re-compaction after a crash restores
-    * EXACT state instead of carrying the doubled rows forever (doubled
-    * bucket rows would inflate [[crossProbe]]'s per-bucket sizes and
-    * could push a genuinely small bucket over `maxBucket` into the
-    * star-link degradation). The label table compacts to its CURRENT
-    * star rows — run [[republishDelta]] for any pending publication
-    * point first, since compaction collapses the per-shard history it
-    * diffs (a feed naming a collapsed shard fails fast via the
-    * shard-existence check instead of emitting a spurious delta).
-    * Re-running compactShards after a crash converges (the
-    * consolidated id is derived from the surviving source dirs, and a
-    * leftover consolidated dir from the crashed attempt is itself a
-    * source).
+  /** Index maintenance: consolidate ingested shard partitions — after
+    * thousands of small-shard ingests the per-shard directories are
+    * exactly the small-files problem q51's compaction solves for data
+    * tables (every probe lists and opens per-shard files). Each table
+    * compacts on its own through [[ShardStore.compact]] (protocol, tier
+    * naming and crash handling live there), SIZE-TIERED by
+    * `tierMaxBytes` (default ∞ = compact everything): only shards at or
+    * under the tier merge, so a mature store consolidates its
+    * small-shard tail without rewriting the accumulated base.
     *
-    * SIZE-TIERED since r16 (`tierMaxBytes`, default ∞ = the original
-    * compact-everything): only shards at or under the tier merge, so a
-    * mature store consolidates its small-shard tail without rewriting
-    * the accumulated base every time. Each table's consolidation rule
-    * is associative (exact-row dedup; min-fold for labels), so folding
-    * a tier early leaves every read's outer fold exact. Tiering changes
-    * the crash story in ONE case: a leftover consolidated dir ABOVE the
-    * tier is no longer a source, so absorb-by-rederivation cannot fire
-    * — instead the deterministic name DETECTS the completed rename
-    * (target partition already present) and the re-run just finishes
-    * deleting the sources, never re-reading them next to their absorbed
-    * copy. Returns (shard dirs before, after) per table
-    * (buckets, shingles, labels), for monitoring. */
+    * Consolidation rules are associative, so folding a tier early
+    * leaves every read's outer fold exact: exact-key dedup for buckets
+    * and shingles, min-root aggregation for labels. They also absorb a
+    * crash leftover (a source surviving next to its tier) on the next
+    * run that reads both, and every read path tolerates the duplicate in
+    * the meantime — candidate pairs are `.distinct()`ed and
+    * [[Dedup.resolveClusters]] is multiplicity-blind; left in place,
+    * doubled bucket rows would inflate [[crossProbe]]'s per-bucket sizes
+    * and could push a small bucket over `maxBucket`. The label table
+    * compacts to its CURRENT star rows — run [[republishDelta]] for any
+    * pending publication point first, since compaction collapses the
+    * per-shard history it diffs (a feed naming a collapsed shard fails
+    * fast via the shard-existence check instead of emitting a spurious
+    * delta). Returns (shard dirs before, after) per table (buckets,
+    * shingles, labels), for monitoring. */
   def compactShards(spark: SparkSession, root: String,
       tierMaxBytes: Long = Long.MaxValue)
       : ((Int, Int), (Int, Int), (Int, Int)) = {
     def compactOne(path: String, schema: StructType,
-        consolidate: DataFrame => DataFrame): (Int, Int) = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dir = new org.apache.hadoop.fs.Path(path)
-      if (!fs.exists(dir)) return (0, 0)
-      def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-      val before = listShards()
-      val sources = before.filter { s =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s")).getLength <= tierMaxBytes
-      }
-      if (sources.size <= 1) return (before.size, before.size)
-      // deterministic fresh id from the source set: re-running after a
-      // crash (old dirs partially deleted, previous consolidated dir now a
-      // source) derives a NEW id, so every leftover is absorbed — and in
-      // tiered mode, where an above-tier leftover CAN'T be a source, the
-      // unchanged source set re-derives the SAME id, which is the crash
-      // detector (see below)
-      val newId = "compacted_" + java.lang.Long.toHexString(
-        sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-      val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-      if (!fs.exists(target)) {
-        // stage as a SIBLING dir (a stray subdir under the partitioned root
-        // would break partition discovery), then rename in as the new
-        // partition directory — Spark refuses to overwrite a path it is
-        // reading, and the rename keeps every crash point duplicate-or-
-        // nothing. Data files carry no ingest_shard column; the partition
-        // value comes from the directory name, exactly as the normal writes
-        val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-        fs.delete(stage, true) // leftover from a crashed attempt
-        consolidate(spark.read.schema(schema).parquet(path)
-            .filter(col("ingest_shard").isin(sources: _*))
-            .drop("ingest_shard"))
-          .write.mode("overwrite").parquet(stage.toString)
-        require(fs.rename(stage, target), s"compact promote failed: $stage")
-      } // else: a prior run crashed between rename and source deletion —
-        // the deterministic name proves the target already holds exactly
-        // these sources' rows; just finish the deletion
-      sources.foreach { s =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s"), true)
-      }
-      (before.size, listShards().size)
-    }
+        consolidate: DataFrame => DataFrame): (Int, Int) =
+      ShardStore.compact(spark, tierMaxBytes,
+        ShardStore.Table(path, schema, consolidate))
     (compactOne(bucketsPath(root), bucketsSchema,
         _.dropDuplicates("id", "band", "bucket")),
       compactOne(shinglesPath(root), shinglesSchema,

@@ -82,33 +82,32 @@ object SemDedupStore {
     centroids.select(col(cidCol).cast("long").as("cid"),
         col(cvecCol).cast("array<double>").as("cv"))
       .coalesce(1).write.mode("overwrite").parquet(centroidsPath(root))
-    spark.range(1).select(lit(threshold).as("threshold"))
-      .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("semdedup.meta", root, threshold)
-    StoreMeta.put("semdedup.cents", root, cents)
+    ShardStore.remember(spark, "semdedup.cents", centroidsPath(root), cents)
+    ShardStore.writeMeta(spark, "semdedup.meta", metaPath(root), threshold)(
+      lit(threshold).as("threshold"))
     ingest(spark, root, emb, idCol, vecCol, shardId, cents, threshold,
       maxClusterSize)
   }
 
-  /** The threshold this store was built with (memoized per root —
-    * [[StoreMeta]]: immutable between builds). */
+  /** The threshold this store was built with (memoized per root until
+    * `meta/` is rewritten — [[ShardStore.cached]]). */
   def readMeta(spark: SparkSession, root: String): Double =
-    StoreMeta.cached("semdedup.meta", root) {
-      spark.read.parquet(metaPath(root)).head().getAs[Double]("threshold")
-    }
+    ShardStore.readMeta(spark, "semdedup.meta", metaPath(root))(
+      _.getAs[Double]("threshold"))
 
   /** Ingest one corpus shard against the persisted state. Idempotent
     * per `shardId` (dynamic partition overwrite). Returns
     * [[currentState]] AFTER the ingest. Centroids are FROZEN by the
     * store contract, so the collected array memoizes per root alongside
-    * the threshold ([[StoreMeta]]) — re-reading + re-collecting them
-    * was two pure-overhead Spark executions per micro-batch in
+    * the threshold ([[ShardStore.cached]]) — re-reading + re-collecting
+    * them was two pure-overhead Spark executions per micro-batch in
     * [[graft.streaming.EventStreams.semDedupSink]]. */
   def addShard(spark: SparkSession, root: String, shard: DataFrame,
       idCol: String, vecCol: String, shardId: String,
       maxClusterSize: Long = 0L): DataFrame = {
     val threshold = readMeta(spark, root)
-    val cents = StoreMeta.cached("semdedup.cents", root) {
+    val cents = ShardStore.cached(spark, "semdedup.cents",
+        centroidsPath(root)) {
       Dedup.collectCentroids(
         spark.read.parquet(centroidsPath(root)), "cid", "cv")
     }
@@ -174,22 +173,12 @@ object SemDedupStore {
       .select(col("f.id").as("id"), lit(true).as("dup"), col("f.removed"))
       .groupBy(col("id")).agg(max(col("dup")).as("dup"),
         max(col("removed")).as("removed"))
-    writeShardPartition(assigned.sortWithinPartitions(col("cluster_id")),
+    ShardStore.write(assigned.sortWithinPartitions(col("cluster_id")),
       assignPath(root), shardId)
-    writeShardPartition(deltas, flagsPath(root), shardId)
+    ShardStore.write(deltas, flagsPath(root), shardId)
     assigned.unpersist(); prior.unpersist()
     currentState(spark, root)
   }
-
-  /** Idempotent shard append (the [[IncrementalDedup]] convention):
-    * dynamic partition overwrite replaces exactly this shard's dir. */
-  private def writeShardPartition(df: DataFrame, path: String,
-      shardId: String): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard")
-      .parquet(path)
 
   /** Read a shard-partitioned store table, or an EMPTY frame when the
     * path has no `ingest_shard=` partition dirs yet.
@@ -207,11 +196,8 @@ object SemDedupStore {
     * write, which is exactly ingest's shape). */
   private def readShardTable(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasParts = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("ingest_shard="))
-    if (hasParts) spark.read.schema(schema).parquet(path)
+    if (ShardStore.shards(spark, path).nonEmpty)
+      spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
   }
@@ -239,14 +225,12 @@ object SemDedupStore {
   }
 
   /** Consolidate accumulated per-shard partitions of `assign/` and
-    * `flags/` — the compaction this store was missing (its siblings
-    * [[IncrementalDedup.compactShards]] / [[ExactSubstrStore
-    * .compactShards]] had it): a year of daily shards is 365 partition
-    * dirs per table whose listing and footer reads tax every ingest's
-    * prior-state scan. SIZE-TIERED like the ExactSubstr store's
-    * (`tierMaxBytes`; the default ∞ compacts everything): only shards
-    * at or under the tier merge, so the accumulated base is never
-    * rewritten just to absorb the small-shard tail.
+    * `flags/` — a year of daily shards is 365 partition dirs per table
+    * whose listing and footer reads tax every ingest's prior-state scan.
+    * SIZE-TIERED (`tierMaxBytes`; the default ∞ compacts everything):
+    * only shards at or under the tier merge, so the accumulated base is
+    * never rewritten just to absorb the small-shard tail. Crash protocol
+    * and tier naming: [[ShardStore]].
     *
     * Per-table consolidation rules, chosen by each table's algebra:
     *  - `assign/` rows are unique per id (global-id caller contract), so
@@ -258,55 +242,19 @@ object SemDedupStore {
     *    consolidation PRE-FOLDS its sources to one row per touched id;
     *    associativity keeps the outer fold exact with later deltas.
     *
-    * Crash protocol = the ExactSubstr store's, because assign is not
-    * duplicate-tolerant: stage to a sibling dir, rename in as a
-    * DETERMINISTIC partition name derived from the source set, then
-    * delete sources — a re-run after the rename-done crash window finds
-    * the target partition already present and just finishes the
-    * deletion (never re-reads sources next to their absorbed copy).
-    *
     * Compaction ends the absorbed shards' replay window (their rows no
     * longer live under the per-shard partitions a replay's dynamic
     * overwrite targets, and the in-flight exclusion prunes by partition
     * name) — only compact shards whose ingest has COMPLETED, and for
     * [[graft.streaming.EventStreams.semDedupSink]] only while the query
-    * is stopped with its checkpoint committed. Single writer, same as
-    * ingest. Returns ((assign before, after), (flags before, after)). */
+    * is stopped with its checkpoint committed. Returns
+    * ((assign before, after), (flags before, after)). */
   def compactShards(spark: SparkSession, root: String,
       tierMaxBytes: Long = Long.MaxValue): ((Int, Int), (Int, Int)) = {
     def compactOne(path: String, schema: StructType,
-        consolidate: DataFrame => DataFrame): (Int, Int) = {
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(dir)) return (0, 0)
-      def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-      val before = listShards()
-      val sources = before.filter { s =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s")).getLength <= tierMaxBytes
-      }
-      if (sources.size <= 1) return (before.size, before.size)
-      val newId = "compacted_" + java.lang.Long.toHexString(
-        sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-      val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-      if (!fs.exists(target)) {
-        val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-        fs.delete(stage, true) // leftover from a crashed attempt
-        consolidate(spark.read.schema(schema).parquet(path)
-            .filter(col("ingest_shard").isin(sources: _*))
-            .drop("ingest_shard"))
-          .write.mode("overwrite").parquet(stage.toString)
-        require(fs.rename(stage, target), s"compact promote failed: $stage")
-      } // else: rename-done crash window — finish the source deletion
-      sources.foreach { s =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"),
-          true)
-      }
-      (before.size, listShards().size)
-    }
+        consolidate: DataFrame => DataFrame): (Int, Int) =
+      ShardStore.compact(spark, tierMaxBytes,
+        ShardStore.Table(path, schema, consolidate))
     (compactOne(assignPath(root), assignSchema,
         _.dropDuplicates("id").sortWithinPartitions(col("cluster_id"))),
       compactOne(flagsPath(root), flagsSchema,

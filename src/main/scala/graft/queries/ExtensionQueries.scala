@@ -436,7 +436,8 @@ object ExtensionQueries {
     "x17_approx_distinct" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
       // TWO aggregates joined on the 3-value flag, a shape chosen by
-      // MEASUREMENT (tools/DebugX17, sf0.1): the sketches must stay in
+      // MEASUREMENT (a one-off timing probe of the candidate shapes at
+      // sf0.1): the sketches must stay in
       // their own coarse agg (3 groups — map-side HLL merge, the 100 TB
       // production path), because any plan that mixes a distinct agg
       // with them re-keys the FIRST aggregate by (flag, distinct-col,

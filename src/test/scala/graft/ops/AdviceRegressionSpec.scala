@@ -4,10 +4,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression pins for the round-7 advisory findings that live behind
+/** Regression pins for advisory findings that live behind
   * package-private surfaces (the driver union-find's primitive map and the
-  * appendable-IVF swap helper); the DataFrame-level findings are pinned in
-  * the graft-package specs next to their ops. */
+  * appendable-IVF swap helper) or inside a single expression's evaluation
+  * (the md5 minhash digest buffer); the DataFrame-level findings are
+  * pinned in the graft-package specs next to their ops. */
 class AdviceRegressionSpec extends AnyFunSuite {
 
   test("LongLongMap grows through resizes and refuses maxCap with a clear error") {
@@ -73,5 +74,28 @@ class AdviceRegressionSpec extends AnyFunSuite {
     raw.mkdirs(p(s"${r2}__stage/marker_new"))
     IVF.promoteStaged(raw, r2, s"${r2}__stage")
     assert(raw.exists(p(s"$r2/marker_new")) && !raw.exists(p(s"${r2}__stage")))
+  }
+
+  test("Md5MinHashSigs equals the string formulation for negative hashes at k = 1001 and k = 10001") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.functions.Md5MinHashSigs
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def h60(s: String): Long =
+      java.lang.Long.parseLong(
+        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+          .substring(0, 15), 16)
+    // the widest inputs: 19-digit negatives ("-" + 19 digits) and the
+    // longest j prefixes these k reach
+    val hs = Seq(Long.MinValue, -4242424242424242424L, -1L, 0L, 7L,
+      Long.MaxValue, -1L)
+    val input = Literal.create(hs, ArrayType(LongType, containsNull = false))
+    for (k <- Seq(1001, 10001)) {
+      val got = Md5MinHashSigs(input, k).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq
+      val want = (0 until k).map(j => hs.distinct.map(h => h60(s"$j:$h")).min)
+      assert(got == want, s"k = $k")
+    }
   }
 }

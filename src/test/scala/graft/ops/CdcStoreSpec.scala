@@ -183,6 +183,127 @@ class CdcStoreSpec extends SparkSpec {
     assert(CdcStore.currentDigests(spark, root).collect().toSet == stateBefore)
   }
 
+  private def fsFor(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def shardDir(table: String, s: String) =
+    new org.apache.hadoop.fs.Path(table, s"ingest_shard=$s")
+
+  private def shardsOf(table: String): Set[String] =
+    fsFor(table).listStatus(new org.apache.hadoop.fs.Path(table))
+      .filter(_.getPath.getName.startsWith("ingest_shard="))
+      .map(_.getPath.getName.stripPrefix("ingest_shard=")).toSet
+
+  private def sizeOf(table: String, s: String): Long =
+    fsFor(table).getContentSummary(shardDir(table, s)).getLength
+
+  // sized so parquet DATA dominates footers, as in the tiered test above
+  private val tierParams = CdcStore.Params(family = "gear", maskBits = 4,
+    minLen = 12, maxLen = 48, nBuckets = 2)
+
+  private def corpus(idBase: Long, n: Int): DataFrame =
+    (0 until n).map(i => (idBase + i, text(12, (idBase + i).toInt)))
+      .toDF("doc_id", "text")
+
+  test("tiered compactions over source sets with equal String.hashCode sums keep every digest") {
+    // "14" + "21" and "15" + "20" have the same String.hashCode sum, so a
+    // hash-sum tier name would collide: the second run would find the
+    // first run's tier, write nothing and delete its own sources
+    val p = tierParams
+    val root = tmpRoot("collide")
+    val ddir = s"$root/digests"
+    val shards = Seq("14" -> corpus(1000, 200), "21" -> corpus(2000, 200),
+      "15" -> corpus(3000, 150), "20" -> corpus(4000, 150))
+    val base = corpus(0, 500)
+    CdcStore.build(base, "doc_id", "text", root, p)
+    for ((id, d) <- shards.take(2))
+      CdcStore.addShard(spark, root, d, "doc_id", "text", id)
+    val tier = math.max(sizeOf(ddir, "14"), sizeOf(ddir, "21"))
+    require(sizeOf(ddir, "base") > tier, "fixture: base must sit above the tier")
+    assert(CdcStore.compactShards(spark, root, tier) == ((3, 2)))
+    val first = (shardsOf(ddir) - "base").head
+    require(sizeOf(ddir, first) > tier,
+      "fixture: the first tier must sit above the threshold so the " +
+        "second run selects only the new shards")
+    for ((id, d) <- shards.drop(2))
+      CdcStore.addShard(spark, root, d, "doc_id", "text", id)
+    require(sizeOf(ddir, "15") <= tier && sizeOf(ddir, "20") <= tier,
+      "fixture: the new shards must sit at or under the tier")
+    val counts = CdcStore.compactShards(spark, root, tier)
+    val expected = chunksOf(shards.map(_._2).foldLeft(base)(_ unionByName _), p)
+      .filter(col("len") >= p.minLen).select(col("digest")).distinct()
+      .collect().toSet
+    val got = CdcStore.currentDigests(spark, root).collect().toSet
+    val nLost = (expected -- got).size
+    assert(nLost == 0, s"of ${expected.size} ingested digests lost")
+    assert(got == expected)
+    assert(counts == ((4, 3)))
+    val tiers = shardsOf(ddir) - "base"
+    assert(tiers.size == 2 && tiers.contains(first) &&
+      tiers.forall(_.startsWith("compacted_")), tiers.toString)
+    // a tier in the older hash-sum naming, without a manifest, is an
+    // ordinary shard: it reads and folds like any other
+    val fs = fsFor(root)
+    fs.rename(shardDir(ddir, first), shardDir(ddir, "compacted_c62"))
+    fs.delete(new org.apache.hadoop.fs.Path(shardDir(ddir, "compacted_c62"),
+      "_sources"), false)
+    assert(CdcStore.currentDigests(spark, root).collect().toSet == expected)
+    assert(CdcStore.compactShards(spark, root) == ((3, 1)))
+    assert(CdcStore.currentDigests(spark, root).collect().toSet == expected)
+  }
+
+  test("a tier whose _sources manifest does not match fails the crash re-run and deletes nothing") {
+    val p = tierParams
+    val root = tmpRoot("manifest")
+    val ddir = s"$root/digests"
+    CdcStore.build(corpus(0, 500), "doc_id", "text", root, p)
+    CdcStore.addShard(spark, root, corpus(1000, 200), "doc_id", "text", "s1")
+    CdcStore.addShard(spark, root, corpus(2000, 200), "doc_id", "text", "s2")
+    val fs = fsFor(root)
+    val tier = math.max(sizeOf(ddir, "s1"), sizeOf(ddir, "s2"))
+    val snap = s"${root}_snap"
+    def copyShards(from: String, to: String): Unit =
+      for (s <- Seq("s1", "s2"))
+        org.apache.hadoop.fs.FileUtil.copy(fs, shardDir(from, s), fs,
+          shardDir(to, s), false, spark.sparkContext.hadoopConfiguration)
+    copyShards(ddir, snap)
+    assert(CdcStore.compactShards(spark, root, tier) == ((3, 2)))
+    val tierName = (shardsOf(ddir) - "base").head
+    val manifest = new org.apache.hadoop.fs.Path(shardDir(ddir, tierName),
+      "_sources")
+    assert(fs.exists(manifest), "the tier carries its source manifest")
+    // the crash-after-rename window, with a tier whose manifest names
+    // other sources
+    copyShards(snap, ddir)
+    require(sizeOf(ddir, tierName) > tier,
+      "fixture: the re-run must select exactly the crashed run's sources")
+    val out = fs.create(manifest, true)
+    try out.write("2:s1\n2:s9\n".getBytes("UTF-8")) finally out.close()
+    val e = intercept[IllegalArgumentException] {
+      CdcStore.compactShards(spark, root, tier)
+    }
+    assert(e.getMessage.contains("_sources"), e.getMessage)
+    assert(shardsOf(ddir) == Set("base", tierName, "s1", "s2"),
+      "no source directory was deleted")
+  }
+
+  test("readMeta sees a meta/ rewritten outside the store") {
+    val p1 = CdcStore.Params(family = "md5", k = 12, divisor = 8,
+      minLen = 10, maxLen = 50, nBuckets = 4)
+    val p2 = p1.copy(k = 20, nBuckets = 8)
+    val root = tmpRoot("meta_fresh")
+    CdcStore.build(docs(1L -> text(30, 1)), "doc_id", "text", root, p1)
+    assert(CdcStore.readMeta(spark, root) == p1)
+    // another process rebuilding the store: same meta/ layout, written
+    // without this process's memo ever being told
+    spark.range(1).select(lit(p2.family).as("family"),
+      lit(p2.maskBits).as("mask_bits"), lit(p2.k).as("k"),
+      lit(p2.divisor).as("divisor"), lit(p2.minLen).as("min_len"),
+      lit(p2.maxLen).as("max_len"), lit(p2.nBuckets).as("n_buckets"))
+      .write.mode("overwrite").parquet(s"$root/meta")
+    assert(CdcStore.readMeta(spark, root) == p2)
+  }
+
   test("meta round-trips and probes refuse a missing store") {
     val p = CdcStore.Params(family = "md5", k = 12, divisor = 8,
       minLen = 10, maxLen = 50, nBuckets = 4)

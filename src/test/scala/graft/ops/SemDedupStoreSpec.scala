@@ -221,4 +221,66 @@ class SemDedupStoreSpec extends SparkSpec {
     assert(shards() === Set("base", tierName))
     assert(state(root).toSeq === before)
   }
+
+  test("tiered compactions over source sets with equal String.hashCode sums keep every vector") {
+    // "14" + "21" and "15" + "20" have the same String.hashCode sum; both
+    // tables (assign and flags) compact through the shared tier path
+    val root = freshRoot("collide")
+    // high-entropy components so parquet DATA, not dictionary pages or
+    // footers, sets the partition sizes; with `planted`, ids 0 and 1 of
+    // the shard are identical all-ones vectors, so flags/ gets partitions
+    def bulk(idBase: Long, n: Int, planted: Boolean = true) =
+      spark.range(0, n, 1, 2)
+        .select((col("id") + idBase).as("vec_id"),
+          transform(sequence(lit(0), lit(7)), j =>
+            when(j === 0 || (lit(planted) && col("id") < 2), lit(1.0))
+              .otherwise(pmod(xxhash64(col("id") + idBase, j), lit(1000000))
+                .cast("double") / lit(500000.0))).as("v"))
+    val parts = Seq("14" -> bulk(10000L, 200), "21" -> bulk(20000L, 200),
+      "15" -> bulk(30000L, 150), "20" -> bulk(40000L, 150))
+    val base = bulk(0L, 500, planted = false)
+    SemDedupStore.buildStore(base, "vec_id", "v", cents, "cid", "cv",
+      0.9999999, root, "base")
+    for ((id, d) <- parts.take(2))
+      SemDedupStore.addShard(spark, root, d, "vec_id", "v", id)
+    val fs = org.apache.hadoop.fs.FileSystem
+      .get(spark.sparkContext.hadoopConfiguration)
+    val aDir = new org.apache.hadoop.fs.Path(s"$root/assign")
+    def sizeOf(s: String): Long = fs.getContentSummary(
+      new org.apache.hadoop.fs.Path(aDir, s"ingest_shard=$s")).getLength
+    def shards(): Set[String] = fs.listStatus(aDir)
+      .filter(_.getPath.getName.startsWith("ingest_shard="))
+      .map(_.getPath.getName.stripPrefix("ingest_shard=")).toSet
+    val tier = math.max(sizeOf("14"), sizeOf("21"))
+    require(sizeOf("base") > tier, "fixture: base must sit above the tier")
+    val ((aB1, aA1), (fB1, fA1)) =
+      SemDedupStore.compactShards(spark, root, tier)
+    assert(aB1 === 3 && aA1 === 2 && fB1 === 2 && fA1 === 1,
+      s"assign $aB1->$aA1 flags $fB1->$fA1")
+    val first = (shards() - "base").head
+    require(sizeOf(first) > tier,
+      "fixture: the first tier must sit above the threshold so the " +
+        "second run selects only the new shards")
+    for ((id, d) <- parts.drop(2))
+      SemDedupStore.addShard(spark, root, d, "vec_id", "v", id)
+    require(sizeOf("15") <= tier && sizeOf("20") <= tier,
+      "fixture: the new shards must sit at or under the tier")
+    val before = state(root).toSeq
+    val ((aB2, aA2), (fB2, fA2)) =
+      SemDedupStore.compactShards(spark, root, tier)
+    val after = state(root).toSeq
+    assert(after.size === before.size,
+      s"${before.size - after.size} of ${before.size} vectors lost")
+    assert(after === before)
+    // flags' first tier is small, so it folds again with the new shards
+    assert(aB2 === 4 && aA2 === 3 && fB2 === 3 && fA2 === 1,
+      s"assign $aB2->$aA2 flags $fB2->$fA2")
+    val union = parts.map(_._2).foldLeft(base)(_ unionByName _)
+    val batch = Dedup.semanticDedup(union, "vec_id", "v",
+        cents, "cid", "cv", 0.9999999)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3), r.getBoolean(4)))
+    assert(state(root).toSeq === batch.toSeq,
+      "every ingested vector and flag survives both tiers")
+  }
 }
