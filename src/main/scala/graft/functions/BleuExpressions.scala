@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -24,8 +23,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * arrays. The aggregate formulation explodes both sides per order
   * (2·maxN corpus-sized exchanges) and joins them back; this is a
   * map-only pass — one hash map per (row, order), zero shuffles.
-  * CodegenFallback per the [[TokenProfile]] convention: a per-row tight
-  * loop, kept out of the interpreted-lambda (HOF) path. */
+  * Codegen through [[NativeLoopCodegenBinary]], as [[TokenProfile]]: a
+  * per-row tight loop, kept out of the interpreted-lambda (HOF) path. */
 case class NgramClipStats(left: Expression, right: Expression, maxN: Int)
     extends BinaryExpression with NativeLoopCodegenBinary {
   require(maxN >= 1 && maxN <= 8, "maxN in 1..8")

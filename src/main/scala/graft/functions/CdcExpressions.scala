@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -98,7 +97,7 @@ case class GearCdcChunks(child: Expression, maskBits: Int, minLen: Int,
   * plan that consumed the lineage. This JVM loop runs the same 85k
   * digests in tens of milliseconds. Hashing is over the UTF-8 bytes of
   * the k-CHAR substring (DuckDB `substring` + `md5` semantics).
-  * CodegenFallback: one per-row primitive loop. */
+  * Codegen through [[NativeLoopCodegen]]: one per-row primitive loop. */
 case class Md5CdcChunks(child: Expression, k: Int, divisor: Int,
     minLen: Int, maxLen: Int)
     extends UnaryExpression with NativeLoopCodegen {

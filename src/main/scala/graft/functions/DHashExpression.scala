@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.graftbridge.Bridge
@@ -29,8 +28,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * while unrelated payloads differ in most cells. Everything from the
   * grid down (gradient bits, packing, banded hamming join) is the real
   * production logic. `binary -> bigint`; empty payload -> 0 (all-equal
-  * cells: strict > yields no bits). CodegenFallback: per-row primitive
-  * loop, interpreted overhead paid once per row. */
+  * cells: strict > yields no bits). Codegen through
+  * [[NativeLoopCodegen]]: a per-row primitive loop, one call per row. */
 case class DHash56(child: Expression)
     extends UnaryExpression with NativeLoopCodegen {
 

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -16,8 +15,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * deployment decodes audio samples / video frames here — while the
   * framing, per-frame reduction, and everything downstream (threshold
   * segmentation, shot-boundary detection) is production logic.
-  * CodegenFallback per the [[DHash56]] convention: per-row primitive
-  * loop. */
+  * Codegen through [[NativeLoopCodegen]], as [[DHash56]]: a per-row
+  * primitive loop. */
 private[functions] trait FrameBased { self: UnaryExpression =>
   def frameBytes: Int
   require(frameBytes > 0, "frameBytes must be positive")

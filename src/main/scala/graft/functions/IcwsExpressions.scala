@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,9 +36,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * catalyst columns, so rounding semantics are untouched by this
   * rewrite. Output: struct<hd: bigint,
   * us: array<struct<u1..u5: double>>> with exactly k elements, element
-  * j carrying sample j's five uniforms. CodegenFallback for the
-  * [[Md5ShingleHashes]] reason: interpreted overhead once per row, the
-  * row's work is already a tight loop. */
+  * j carrying sample j's five uniforms. Codegen through
+  * [[NativeLoopCodegen]], as [[Md5ShingleHashes]]: one call per row into
+  * the row's loop, which is already tight. */
 case class Md5IcwsDraws(child: Expression, k: Int)
     extends UnaryExpression with NativeLoopCodegen {
 

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -21,8 +20,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * and has no shuffle-based formulation at all — any dataframe
   * spelling would be a per-row HOF lambda (interpreted dispatch per
   * DP CELL, the measured 8× Gopher-tower cliff class, times n·m cells).
-  * CodegenFallback per the [[NgramClipStats]] convention: a per-row
-  * tight loop, interpreted overhead paid once per row. */
+  * Codegen through [[NativeLoopCodegenBinary]], as [[NgramClipStats]]:
+  * a per-row tight loop, one call per row. */
 case class TokenLcs(left: Expression, right: Expression)
     extends BinaryExpression with NativeLoopCodegenBinary {
 

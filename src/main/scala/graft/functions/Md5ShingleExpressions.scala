@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -38,9 +37,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * dedup stays on the xxhash64 family ([[ShingleHashes]] +
   * [[MinHashSigs]]: no string materialization at all); this family is
   * the ORACLE-CHECKABLE surface, and the two are pinned to recover the
-  * same planted near-duplicate pairs by spec. CodegenFallback for the
-  * same reason as [[ShingleHashes]]: per-row overhead once, the row's
-  * work is already a tight loop.
+  * same planted near-duplicate pairs by spec. The expressions generate
+  * code through [[NativeLoopCodegen]], as [[ShingleHashes]]: one call
+  * per row into the row's loop, which is already tight.
   */
 private[graft] object Md5Family {
 
@@ -336,7 +335,7 @@ case class Md5NgramBuckets(child: Expression, buckets: Int, bigrams: Boolean)
   * set semantics; gram arrays are containsNull=false by their native
   * producers ([[WordGramExpressions]]), so the null-element leg of
   * the replaced lambda chain is unreachable and not replicated.
-  * CodegenFallback: per-row overhead once, the row's work is a tight
+  * Codegen through [[NativeLoopCodegen]]: one call per row into a tight
   * loop. */
 case class Md5PairKeys(child: Expression)
     extends UnaryExpression with NativeLoopCodegen {
@@ -387,11 +386,9 @@ case class Md5PairKeys(child: Expression)
   * interpreted digest-to-hex-to-parse chains per token occurrence
   * (build) and per probe (estimate). Bucket i = (top 32 bits of
   * md5(utf8("cms<i>_" + tok)), i.e. the first-8-hex-digit prefix) mod
-  * width. CodegenFallback: per-row overhead once, the row's work is a
-  * tight loop. */
-// NativeLoopCodegen (r17): keeps the hosting projection inside its
-// whole-stage span (see the trait scaladoc); the CodegenFallback
-// span-break rationale above is superseded by the measured A/B.
+  * width. Codegen through [[NativeLoopCodegen]], which keeps the
+  * hosting projection inside its whole-stage span (see the trait
+  * scaladoc). */
 case class Md5CmsBuckets(child: Expression, depth: Int, width: Int)
     extends UnaryExpression with NativeLoopCodegen {
 
@@ -447,7 +444,7 @@ case class Md5CmsBuckets(child: Expression, depth: Int, width: Int)
   * computed with numberOfLeadingZeros instead of the ladder, same
   * exact integer semantics. The column spellings stay as the
   * oracle/spec reference (the hashedNgramBucketsHof convention).
-  * CodegenFallback: per-row overhead once. */
+  * Codegen through [[NativeLoopCodegen]]: one call per row. */
 case class Md5HllRegister(child: Expression, p: Int)
     extends UnaryExpression with NativeLoopCodegen {
 

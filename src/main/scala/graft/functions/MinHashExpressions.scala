@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -30,8 +29,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * bucket, pairing them all as candidates. Callers filter nulls
   * ([[graft.ops.Dedup.minhashSignatures]] does), keeping the map-only
   * path row-for-row equal to the aggregate for ALL inputs.
-  * CodegenFallback is fine: interpreted overhead is per ROW, and the
-  * row's work is already a tight loop.
+  * Codegen through [[NativeLoopCodegen]]: one call per ROW into the
+  * row's loop, which is already tight.
   */
 case class MinHashSigs(child: Expression, k: Int)
     extends UnaryExpression with NativeLoopCodegen {

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -23,8 +22,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * Shingle-count semantics match [[graft.ops.Dedup.shingles]]: n > w ->
   * n - w + 1 windows; n <= w (including 0) -> 1 whole-text shingle.
-  * CodegenFallback is fine here: the interpreted overhead is per ROW, and
-  * the row's work is already a tight loop.
+  * Codegen through [[NativeLoopCodegen]]: one call per ROW into the
+  * row's loop, which is already tight.
   */
 case class ShingleHashes(child: Expression, w: Int)
     extends UnaryExpression with NativeLoopCodegen {

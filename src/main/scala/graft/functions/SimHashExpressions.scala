@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -23,8 +22,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * An empty token array yields NULL (the aggregate formulation emits no
   * row for a token-less doc; callers drop nulls to match). Null token
-  * slots hash as the seed, matching [[ShingleHashes]]. CodegenFallback is
-  * fine: interpreted overhead is per ROW. */
+  * slots hash as the seed, matching [[ShingleHashes]]. Codegen through
+  * [[NativeLoopCodegen]]: one call per ROW. */
 case class SimHash64(child: Expression)
     extends UnaryExpression with NativeLoopCodegen {
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,10 +48,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Custom doGenCode (r17, the [[NativeLoopCodegen]] move): the null
   * contract is asymmetric (null removals != null result), so the
   * generated code inlines that handling around one static call to
-  * [[TokenSplice.splice]] — the hosting projection keeps its
-  * whole-stage span instead of CodegenFallback's operator-wide break
-  * (the rebuild legs of exactSubstrDedup run this over every token of
-  * every document). */
+  * [[TokenSplice.splice]], so the hosting projection keeps its
+  * whole-stage span (the rebuild legs of exactSubstrDedup run this over
+  * every token of every document). */
 case class TokenSplice(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,7 +23,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * aggregate back to the document row — three operators and a shuffle for
   * per-row state. This is a map-only pass; the explode formulations are
   * kept as `TextAnalysis.qualityMetricsAgg` / `languageIdAgg` and pinned
-  * value-identical by spec. CodegenFallback is fine: per-row tight loop. */
+  * value-identical by spec. Codegen through [[NativeLoopCodegen]]: one
+  * call per row into a tight loop. */
 case class TokenProfile(child: Expression, lists: Seq[Seq[String]])
     extends UnaryExpression with NativeLoopCodegen {
 

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,9 +35,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * grams + a doc-keyed window), and the two are pinned by spec to
   * recover the same planted copied spans (hash families differ, so the
   * selected POSITIONS differ — the detection contract is what matches,
-  * the [[Md5Family]] precedent). CodegenFallback for the usual reason:
-  * interpreted overhead is once per row, the row's work is already a
-  * tight loop. */
+  * the [[Md5Family]] precedent). Codegen through [[NativeLoopCodegen]]:
+  * one call per row into the row's loop, which is already tight. */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression with NativeLoopCodegen {
 
@@ -99,11 +97,9 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   * its tie-break struct, the loop compares positions directly, so no
   * document-length bound is inherited here (the oracle's HUGEINT
   * replay keeps its own bound; fixture-scale by design).
-  * CodegenFallback for the [[WinnowFingerprints]] reason: interpreted
-  * overhead is once per row, the row's work is already a tight loop. */
-// NativeLoopCodegen (r17): the generated code calls nullSafeEval through a
-// reference object, so the hosting projection/generator keeps its
-// whole-stage span instead of CodegenFallback's operator-wide span break.
+  * Codegen through [[NativeLoopCodegen]], as [[WinnowFingerprints]]:
+  * the generated code calls nullSafeEval through a reference object, so
+  * the hosting projection/generator keeps its whole-stage span. */
 case class Md5WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression with NativeLoopCodegen {
 

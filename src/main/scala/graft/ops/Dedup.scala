@@ -1078,64 +1078,48 @@ object Dedup {
     * overlap monitoring: daily shards merge into sources x k longs of
     * state via the sketch's min-merge, so the overlap dashboard never
     * re-scans history (the [[graft.ops.IncrementalDedup]] argument
-    * applied to corpus-level monitoring). Writes go through the repo's
-    * stage / retire / promote swap with leftover recovery at every
-    * entry point, so a crash at any step loses at most the in-flight
-    * shard — which replays idempotently (min-merge is idempotent and
-    * commutative: re-ingesting a shard, or ingesting shards in any
-    * order, lands on the same state, pinned by spec). */
+    * applied to corpus-level monitoring). Writes commit through
+    * [[DirSwap]] (`signatures__stage`, `signatures__old`) after writer
+    * recovery; reads heal. A crash at any step loses at most the
+    * in-flight shard — which replays idempotently (min-merge is
+    * idempotent and commutative: re-ingesting a shard, or ingesting
+    * shards in any order, lands on the same state, pinned by spec). */
   def writeSourceSignatures(spark: org.apache.spark.sql.SparkSession,
       root: String, df: DataFrame, srcCol: String, textCol: String,
-      n: Int = 3, k: Int = 128): Unit =
-    swapWrite(spark, s"$root/signatures",
-      srcSignatures(df, srcCol, textCol, n, k))
+      n: Int = 3, k: Int = 128): Unit = {
+    val swap = DirSwap(spark, s"$root/signatures")
+    swap.recover()
+    srcSignatures(df, srcCol, textCol, n, k)
+      .write.mode("overwrite").parquet(swap.stage.toString)
+    swap.commit()
+  }
 
   /** Merge one shard into the store (create-if-absent). */
   def ingestSourceSignatures(spark: org.apache.spark.sql.SparkSession,
       root: String, shard: DataFrame, srcCol: String, textCol: String,
       n: Int = 3, k: Int = 128): Unit = {
     val path = s"$root/signatures"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, path)
+    val swap = DirSwap(spark, path)
+    swap.recover()
     val shardSig = srcSignatures(shard, srcCol, textCol, n, k)
     val merged =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+      if (swap.fs.exists(swap.target))
         requireSigFamily(spark.read.parquet(path), path)
           .unionByName(shardSig)
           .groupBy(col("src"), col("j")).agg(min(col("mh")).as("mh"))
           .withColumn("fam", lit(SigFamily))
       else shardSig
-    swapWrite(spark, path, merged)
+    // staged: the merged plan reads the current generation
+    merged.write.mode("overwrite").parquet(swap.stage.toString)
+    swap.commit()
   }
 
   /** Pairwise overlap estimate straight from the persisted store. */
   def estimateSourceOverlap(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame = {
     val path = s"$root/signatures"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, path)
+    DirSwap(spark, path).heal()
     estimateFromSignatures(requireSigFamily(spark.read.parquet(path), path))
-  }
-
-  /** Stage -> retire -> promote swap (the [[graft.streaming.EventStreams
-    * .recoverUpsertTarget]] layout): materialize the new generation
-    * FULLY in `__stage` (the plan may read the current target), retire
-    * the target to `__old`, promote the stage, drop the retiree. */
-  private def swapWrite(spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val stage = new org.apache.hadoop.fs.Path(path + "__stage")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    df.write.mode("overwrite").parquet(stage.toString)
-    if (fs.exists(target))
-      require(fs.rename(target, old), s"retire failed: $target")
-    require(fs.rename(stage, target), s"promote failed: $stage")
-    fs.delete(old, true)
   }
 
   /** Exact n-gram Jaccard similarity for explicit candidate pairs

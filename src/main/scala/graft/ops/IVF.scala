@@ -249,16 +249,12 @@ object IVF {
     // replacement must be crash-safe: vectors and centroids are only
     // consistent TOGETHER (new vectors under old centroids silently
     // mis-route probes — worse than a missing dir), so the swap unit is
-    // the whole index ROOT, staged as a sibling and swapped with the same
-    // stage/retire/promote protocol as the CDC upsert sink
-    // ([[graft.streaming.EventStreams.recoverUpsertTarget]]). A death at
-    // any point leaves either the old generation or the new one
-    // recoverable — never a torn mix, never neither.
+    // the whole index ROOT, staged as a sibling and committed through
+    // [[DirSwap]] (`<root>__stage`, `<root>__old`): never a torn mix.
     val spark = assigned.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, root)
-    val stageRoot = root + "__stage"
+    val swap = DirSwap(spark, root)
+    swap.recover()
+    val stageRoot = swap.stage.toString
     // stage FIRST: `assigned` may legitimately read the live index (a
     // rebuild re-training over the stored vectors), so the live root stays
     // untouched until the staged generation is complete
@@ -290,85 +286,7 @@ object IVF {
       .filter(!_.isEmpty).foreach(_.write
         .mode("overwrite").partitionBy("delete_shard")
         .parquet(s"$stageRoot/tombstones"))
-    promoteStaged(fs, root, stageRoot)
-  }
-
-  /** Swap a fully-staged generation live: retire the target to
-    * `<root>__old`, promote the stage into its place. A CONCURRENT
-    * reader's [[healRoot]] can fire inside the window between the two
-    * renames — it sees `__old` present with the target missing, cannot
-    * tell a live swap from a crashed one, and restores the retired
-    * generation under the writer's promote. Depending on the filesystem
-    * that makes the promote rename either return false (no-overwrite
-    * semantics) or "succeed" by moving the stage INTO the restored
-    * directory as a child (HDFS rename-into-dir; RawLocalFileSystem's
-    * copy fallback) — so the promote trusts NEITHER outcome: it verifies
-    * the promoted root is actually the staged generation, un-nests any
-    * swallowed stage, and retries the retire+promote. Bounded: each
-    * extra round means a reader healed inside a two-rename window; three
-    * consecutive losses indicate something other than readers owns these
-    * paths, which IS an error (and even then the live generation is one
-    * [[healRoot]] away — every intermediate state stays
-    * reader-recoverable). */
-  private[ops] def promoteStaged(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, stageRoot: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(root)
-    val old = new org.apache.hadoop.fs.Path(root + "__old")
-    val stage = new org.apache.hadoop.fs.Path(stageRoot)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 3)
-        throw new IllegalStateException(
-          s"index promote lost the reader-heal race 3 times: " +
-          s"$stageRoot -> $target — live generation recoverable at " +
-          s"$old via reader heal")
-      if (fs.exists(target)) {
-        fs.delete(old, true) // debris from a lost round / crashed build
-        require(fs.rename(target, old), s"index retire failed: $target")
-      }
-      val renamed = fs.rename(stage, target)
-      val nested = new org.apache.hadoop.fs.Path(target, stage.getName)
-      if (renamed && !fs.exists(nested)) {
-        fs.delete(old, true)
-        return
-      }
-      // lost the race: a reader restored the retiree at target. If the
-      // "successful" rename actually nested the stage inside it, pull
-      // the staged generation back out before retrying the swap.
-      if (fs.exists(nested))
-        require(fs.rename(nested, stage), s"stage recovery failed: $nested")
-    }
-  }
-
-  /** Reader-side heal for [[writeIndexAppendable]]'s swap: a build that
-    * died between retire and promote leaves the live generation at
-    * `<root>__old` — restore it. Unlike the writer's
-    * `recoverUpsertTarget`, a leftover `<root>__stage` is left alone: a
-    * reader cannot tell a crashed build's debris from a CONCURRENT
-    * build's in-flight stage, and deleting the latter would destroy a
-    * live rebuild. The writer (which holds the single-writer lock by
-    * contract) cleans stages at its next run. */
-  private def healRoot(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(root)
-    val old = new org.apache.hadoop.fs.Path(root + "__old")
-    if (fs.exists(old)) {
-      if (!fs.exists(target)) {
-        // concurrent READERS may race this restore (only writers are
-        // single by contract): losing the rename is fine as long as
-        // someone won — require only that the target exists afterwards
-        if (!fs.rename(old, target))
-          require(fs.exists(target), s"index restore failed: $old")
-        // on some filesystems a LOSING rename "succeeds" by nesting the
-        // source inside the winner's target (rename-into-dir / local
-        // copy fallback) — drop that debris; the target never
-        // legitimately contains a directory named like the retiree
-        val nested = new org.apache.hadoop.fs.Path(target, old.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      } else fs.delete(old, true)
-    }
-    ()
+    swap.commit()
   }
 
   private def writeVectorShard(assigned: DataFrame, root: String,
@@ -380,86 +298,40 @@ object IVF {
       .parquet(s"$root/vectors")
 
   /** The frozen centroids an appendable index was built with. Heals a
-    * crashed rebuild swap first (and a crashed [[splitList]] centroid
-    * swap — see [[promoteCentroidsStage]]), so every read path (and
+    * crashed rebuild swap first (and settles a [[splitList]] centroid
+    * swap — see [[settleCentroids]]), so every read path (and
     * [[appendVectors]], which must assign with these exact centroids)
     * sees a consistent generation. */
   def readModel(spark: org.apache.spark.sql.SparkSession,
       root: String): Model = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healRoot(fs, root)
-    promoteCentroidsStage(fs, root)
+    DirSwap(spark, root).heal()
+    settleCentroids(spark, root)
     Model(spark.read.parquet(s"$root/centroids")
       .orderBy(col("cid")).collect()
       .map(_.getSeq[Double](1).toArray))
   }
 
-  /** Centroid-file swap for [[splitList]] — the list-scoped sibling of
-    * the root-level stage/retire/promote. The split cannot afford the
-    * rebuild's whole-root staging (it must not rewrite the untouched
-    * 99% of a 100 TB index to split one list), so only the tiny
-    * centroids file swaps: the new generation is fully written to
-    * `centroids__split` first (parquet commits `_SUCCESS` last, so its
-    * presence certifies a complete stage), then the live dir is
-    * deleted and the stage renamed in. Every crash state heals here,
-    * on the next [[readModel]]: a torn stage (no `_SUCCESS`) is debris
-    * — deleted, live generation intact; a complete stage supersedes
-    * whatever live state remains (the split's vector copies were fully
-    * written BEFORE the stage — ordering contract in [[splitList]]),
-    * so it promotes. Single-writer contract as everywhere in this
-    * lifecycle — but this promote runs on the READ path (every
-    * [[readModel]]), and concurrent READERS are explicitly allowed, so
-    * it must mirror [[healRoot]]'s tolerance rather than the writer's
-    * strictness: the live dir is never deleted before the swap can
-    * succeed (it is RETIRED via rename and cleaned only after a live
-    * generation provably exists), losing any rename race to another
-    * reader is fine as long as someone won, and a stage WITHOUT
-    * `_SUCCESS` is left strictly alone — a reader cannot tell a
-    * crashed split's torn stage from a CONCURRENT [[splitList]]'s
-    * in-flight one, and deleting the latter would destroy a live
-    * writer's work mid-flight. The single writer cleans torn stages
-    * implicitly: [[splitList]] writes `centroids__split` with
-    * mode=overwrite, so its next run replaces any debris. */
-  private def promoteCentroidsStage(fs: org.apache.hadoop.fs.FileSystem,
+  /** The centroid-file swap of [[splitList]] — the list-scoped sibling
+    * of the root swap. The split cannot afford the rebuild's whole-root
+    * staging (it must not rewrite the untouched 99% of a 100 TB index to
+    * split one list), so only the tiny centroids file swaps, staged in
+    * `centroids__split` and retired to `centroids__retired`. */
+  private def centroidSwap(spark: org.apache.spark.sql.SparkSession,
+      root: String): DirSwap =
+    DirSwap(spark, s"$root/centroids", "__split", "__retired")
+
+  /** The read path's half of the centroid swap: a stage with `_SUCCESS`
+    * (parquet commits it last) is complete and supersedes the live file
+    * — the split's vector copies were written before it (ordering
+    * contract in [[splitList]]) — so it is committed; otherwise the swap
+    * is only healed, and a torn stage is left to the single writer,
+    * whose next `mode=overwrite` stage write replaces it. */
+  private def settleCentroids(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(s"$root/centroids__split")
-    val live = new org.apache.hadoop.fs.Path(s"$root/centroids")
-    val retired = new org.apache.hadoop.fs.Path(s"$root/centroids__retired")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS"))) {
-      // no promotable stage. The only work left here is clearing a
-      // retiree orphaned by a crash between a promote and its cleanup
-      // (live=new generation, retired=old, stage consumed) — and, purely
-      // defensively, restoring a retiree if live is somehow missing
-      // (unreachable by this protocol's own states, but never leave the
-      // index headless when a copy of it exists).
-      if (fs.exists(retired)) {
-        if (fs.exists(live)) fs.delete(retired, true)
-        else if (!fs.rename(retired, live))
-          require(fs.exists(live), s"centroid restore failed: $retired")
-      }
-      return
-    }
-    // retire-then-promote; every step may race other readers
-    if (fs.exists(live) && !fs.rename(live, retired)) {
-      // lost the retire race — another reader moved it (or already
-      // promoted a fresh generation here); the promote below settles it
-    }
-    if (!fs.rename(stage, live)) {
-      // lost the promote race: the stage was consumed by the winner. If
-      // we (or a crashed predecessor) retired live and nobody has
-      // promoted yet, restore the retiree rather than leaving the index
-      // headless on a spurious rename failure.
-      if (!fs.exists(live) && fs.exists(retired)) fs.rename(retired, live)
-      require(fs.exists(live), s"centroid stage promote failed: $stage")
-    }
-    // a LOSING rename can "succeed" by nesting its source inside the
-    // winner's target (the same filesystem quirk [[healRoot]] handles)
-    val nested = new org.apache.hadoop.fs.Path(live, stage.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
-    // the retired old generation is superseded by the promoted stage —
-    // clean it only once a live generation provably exists
-    if (fs.exists(live) && fs.exists(retired)) fs.delete(retired, true)
+    val swap = centroidSwap(spark, root)
+    if (swap.fs.exists(new org.apache.hadoop.fs.Path(swap.stage, "_SUCCESS")))
+      swap.commit()
+    else swap.heal()
   }
 
   /** Ingest a new embedding shard: assign against the PERSISTED centroids
@@ -593,17 +465,16 @@ object IVF {
     * partition dirs (the small-files problem — the same maintenance role
     * as [[graft.ops.IncrementalDedup.compactShards]]): rewrite the
     * vectors tree minus tombstoned ids into a single `shardId` ingest
-    * shard, carry the centroids over unchanged, and promote with the
-    * stage/retire/promote swap — the tombstone dir is simply not copied
+    * shard, carry the centroids over unchanged, and commit through
+    * [[DirSwap]] — the tombstone dir is simply not copied
     * into the new generation, so a crash at ANY point leaves either the
     * old generation (tombstones intact, still masked at read) or the new
     * one (deletes applied, tombstones gone); never a state where deleted
     * ids resurface. */
   def compactVectors(spark: org.apache.spark.sql.SparkSession, root: String,
       idCol: String, shardId: String = "compacted"): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, root)
+    val swap = DirSwap(spark, root)
+    swap.recover()
     val vectors = spark.read.parquet(s"$root/vectors")
     val tombs = tombstoneFrame(spark, root)
     val retired = retiredLists(tombs)
@@ -617,13 +488,13 @@ object IVF {
         unretired(idCol) === col("tomb_id"), "left_anti")
       case None => unretired
     }
-    val stageRoot = root + "__stage"
+    val stageRoot = swap.stage.toString
     // stage FIRST — the rewrite reads the live generation
     writeVectorShard(live.drop("ingest_shard"), stageRoot, shardId)
     val cents = spark.read.parquet(s"$root/centroids")
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$stageRoot/centroids")
-    promoteStaged(fs, root, stageRoot)
+    swap.commit()
   }
 
   /** Index-health statistics over the appendable layout — the nprobe /
@@ -713,8 +584,8 @@ object IVF {
     * Write ordering and crash states (single writer, readers heal):
     * (1) vector copies land under the new cids — invisible to the old
     * model, which never probes cids ≥ nc; (2) the centroid swap stages
-    * to `centroids__split` and promotes via [[promoteCentroidsStage]]
-    * (readers heal a crash inside the swap); (3) the list tombstone
+    * to `centroids__split` and commits ([[centroidSwap]]; readers
+    * settle a crash inside the swap); (3) the list tombstone
     * arms the prune. A crash before (3) leaves a window where the new
     * model sees the old list unpruned next to the copies — a query
     * probing both the retired slot and a sub-list can see a vector id
@@ -778,11 +649,11 @@ object IVF {
           org.apache.spark.sql.types.StructField("centroid",
             org.apache.spark.sql.types.ArrayType(
               org.apache.spark.sql.types.DoubleType, false), false)))
+        val swap = centroidSwap(spark, root)
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
           .coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/centroids__split")
-        promoteCentroidsStage(new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+          .parquet(swap.stage.toString)
+        swap.commit()
       }
       // (3) the list tombstone arms the prune — written LAST so every
       // earlier crash state still reads consistently under whichever

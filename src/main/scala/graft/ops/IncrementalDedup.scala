@@ -174,45 +174,40 @@ object IncrementalDedup {
 
   /** One-time upgrade for an index whose labels/ was written before the
     * delta log (flat files, no partitions): rewrite the flat rows as a
-    * single "legacy" shard partition via stage/retire/promote (readers
-    * heal a crashed swap through the recoverUpsertTarget call in
-    * [[readRawLabels]]). The legacy rows are already CURRENT star labels
+    * single "legacy" shard partition, committed through [[DirSwap]]
+    * (`labels__migrate_stage`, `labels__old`; [[readRawLabels]] heals a
+    * crashed swap). The legacy rows are already CURRENT star labels
     * (the old layout rewrote them wholesale each shard), so one partition
     * holding them verbatim preserves every read path. Returns true if a
     * migration ran, false if the layout was already current. Idempotent. */
   def migrateLegacyLabels(spark: SparkSession, root: String): Boolean = {
-    val lp = new org.apache.hadoop.fs.Path(labelsPath(root))
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, labelsPath(root))
-    if (!fs.exists(lp) || !hasLegacyLabelLayout(fs, lp)) return false
+    val swap = labelSwap(spark, root)
+    swap.recover()
+    if (!swap.fs.exists(swap.target) ||
+      !hasLegacyLabelLayout(swap.fs, swap.target)) return false
     val flat = spark.read.schema(StructType(Seq(
         StructField("id", LongType), StructField("cluster_id", LongType))))
       .parquet(labelsPath(root))
       .withColumn("ingest_shard", lit("legacy"))
-    val stage = new org.apache.hadoop.fs.Path(
-      labelsPath(root) + "__migrate_stage")
-    fs.delete(stage, true)
     flat.write.partitionBy("ingest_shard").mode("overwrite")
-      .parquet(stage.toString)
-    val old = new org.apache.hadoop.fs.Path(labelsPath(root) + "__old")
-    require(fs.rename(lp, old), s"label retire failed: $lp")
-    require(fs.rename(stage, lp), s"label promote failed: $stage")
-    fs.delete(old, true)
+      .parquet(swap.stage.toString)
+    swap.commit()
     true
   }
+
+  private def labelSwap(spark: SparkSession, root: String): DirSwap =
+    DirSwap(spark, labelsPath(root), "__migrate_stage")
 
   /** The raw label delta log: every (id, cluster_id) row ever appended,
     * with its `ingest_shard`. An in-flight shard is excluded so a
     * half-written previous attempt of the same shard is invisible. */
   private def readRawLabels(spark: SparkSession, root: String,
       excludeShard: Option[String] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // heals a migrateLegacyLabels swap that died between retire and
-    // promote (labels__old holds the state); its stage-dir cleanup is a
-    // no-op here since the migration stages under a different suffix
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, labelsPath(root))
-    val lp = new org.apache.hadoop.fs.Path(labelsPath(root))
+    // promote (labels__old holds the state)
+    val swap = labelSwap(spark, root)
+    swap.heal()
+    val (fs, lp) = (swap.fs, swap.target)
     val base =
       if (fs.exists(lp)) {
         require(!hasLegacyLabelLayout(fs, lp),

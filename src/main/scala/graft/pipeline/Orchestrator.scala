@@ -1,14 +1,12 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
-
 import scala.util.{Failure, Success, Try}
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.bench.StageTimers
+import graft.ops.DirSwap
 import graft.quality.DataQuality
 import graft.schema.Schemas
 import graft.sinks.Sinks
@@ -146,32 +144,27 @@ class Orchestrator(spark: SparkSession, cfg: AppConfig,
         // local stand-in for the staged warehouse upsert (K2): keyed merge
         // into a parquet table named after target_table. The merged frame
         // READS the path it replaces, so it is written to a staging
-        // directory first and swapped in atomically — the same
-        // staging-then-swap discipline the reference uses warehouse-side
-        // (readshift_loader.py:68-92); never overwrite an input in place.
+        // directory first and committed through DirSwap (`__staging`,
+        // `__old`) — the same staging-then-swap discipline the reference
+        // uses warehouse-side (readshift_loader.py:68-92). Recovery runs
+        // before the existence check: after a crash between the swap's
+        // two renames the table lives at `__old`, and an upsert into the
+        // missing target would keep only the new drop.
         val path = s"$outRoot/${spec.targetTable.getOrElse(name)}"
+        val swap = DirSwap(spark, path, "__staging")
+        swap.recover()
         val merged =
-          if (spec.keyColumns.nonEmpty &&
-            new java.io.File(path).exists()) {
+          if (spec.keyColumns.nonEmpty && swap.fs.exists(swap.target)) {
             val target = spark.read.parquet(path)
             Sinks.upsert(target, df, spec.keyColumns)
           } else df
-        val staging = Paths.get(s"${path}__staging")
-        Sinks.writePartitioned(merged, staging.toString, "overwrite",
+        Sinks.writePartitioned(merged, swap.stage.toString, "overwrite",
           spec.partitionCols)
-        Load(path, () => swapIn(staging, Paths.get(path)),
-          () => FileUtils.deleteDirectory(staging.toFile))
+        Load(path, () => swap.commit(),
+          () => swap.fs.delete(swap.stage, true))
       case other =>
         throw new IllegalArgumentException(s"Unsupported target type: $other")
     }
-
-  private def swapIn(staging: Path, p: Path): Unit =
-    if (Files.exists(p)) {
-      val old = Paths.get(s"${p}__old")
-      Files.move(p, old)
-      Files.move(staging, p)
-      FileUtils.deleteDirectory(old.toFile)
-    } else Files.move(staging, p)
 
   private def writeQualityResults(name: String,
       qr: DataQuality.QualityResults): Unit = {

@@ -213,14 +213,11 @@ object Sinks {
     * salt, range partitioning maps each partition VALUE to one task, and
     * a skewed value (one hot day) writes through a single core with
     * `maxRecordsPerFile` splitting its output serially — the 100 TB
-    * nightly-compaction bottleneck. The rewrite swaps in via the same
-    * crash-safe stage/retire/rename used by
-    * [[graft.streaming.EventStreams.upsertParquetSink]] — a death at any
-    * point leaves either the old or the new generation on disk, never
-    * neither ([[graft.streaming.EventStreams.recoverUpsertTarget]] runs
-    * first to heal a previous crash). Single-writer like every bare-
-    * parquet swap: a reader racing the swap can observe a missing dir;
-    * a lakehouse table format would commit the same rewrite atomically.
+    * nightly-compaction bottleneck. The rewrite swaps in through
+    * [[graft.ops.DirSwap]] (`<path>__stage`, `<path>__old`), which first
+    * recovers a previous crash. Single-writer like every bare-parquet
+    * swap; a lakehouse table format would commit the same rewrite
+    * atomically.
     *
     * Returns (files before, files after). Content is byte-identical by
     * construction — same rows, same schema, new file layout (q51 pins
@@ -231,14 +228,11 @@ object Sinks {
     require(partitionCols.nonEmpty,
       "compactPartitioned needs the dataset's partition columns")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.EventStreams.recoverUpsertTarget(fs, path)
-    val before = parquetFiles(fs, target)
+    val swap = graft.ops.DirSwap(spark, path)
+    swap.recover()
+    val before = parquetFiles(swap.fs, swap.target)
     val totalBytes = before.map(_.getLen).sum
     val df = spark.read.parquet(path)
-    val stage = new org.apache.hadoop.fs.Path(path + "__stage")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
     // Per-partition-value target file counts from the value's row share
     // of the observed bytes. The counts frame is one row per partition
     // value (bounded — it IS the directory count being compacted), so
@@ -283,12 +277,9 @@ object Sinks {
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecords)
       .partitionBy(partitionCols: _*)
-      .parquet(stage.toString)
+      .parquet(swap.stage.toString)
     counts.unpersist()
-    require(fs.rename(target, old), s"retire failed: $target")
-    require(fs.rename(stage, target),
-      s"staged-compaction rename failed: $stage -> $target")
-    fs.delete(old, true)
-    (before.size.toLong, parquetFiles(fs, target).size.toLong)
+    swap.commit()
+    (before.size.toLong, parquetFiles(swap.fs, swap.target).size.toLong)
   }
 }

@@ -242,15 +242,13 @@ object EventStreams {
     * first compacted to one row per key (max_by over `orderCol`, so two
     * updates to one key inside a single micro-batch resolve
     * deterministically — highest `orderCol` wins), then merged against
-    * the current target and the result swapped in via stage-write +
-    * retire-and-rename. Parquet has no transactional MERGE: the swap is
-    * the single-writer pattern (readers racing it can observe a missing
-    * dir); a lakehouse table format would take the same merged frame
-    * through its MERGE instead. CRASH SAFETY: the current state is
-    * retired to `<target>__old` before the stage renames in, and
-    * [[recoverUpsertTarget]] runs at every batch — a death at any point
-    * of the swap loses at most the in-flight batch (which the checkpoint
-    * replays), never the accumulated table. */
+    * the current target and the result swapped in through
+    * [[graft.ops.DirSwap]] (`<target>__stage`, `<target>__old`), which
+    * recovers a crashed swap at every batch: a death at any point loses
+    * at most the in-flight batch (which the checkpoint replays), never
+    * the accumulated table. Parquet has no transactional MERGE: the swap
+    * is the single-writer pattern; a lakehouse table format would take
+    * the same merged frame through its MERGE instead. */
   def upsertParquetSink(df: DataFrame, keyCols: Seq[String], orderCol: String,
       targetPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -264,53 +262,20 @@ object EventStreams {
             .groupBy(keyCols.map(col): _*)
             .agg(max_by(struct(cols.map(col): _*), col(orderCol)).as("__last"))
             .select(cols.map(c => col(s"__last.$c").as(c)): _*)
-          // resolve the filesystem FROM the target path (not the default
-          // FS): with e.g. an HDFS default config and a file: target, the
-          // default-FS handle would run exists/rename/delete against the
-          // wrong filesystem and corrupt the swap
-          val fs = new org.apache.hadoop.fs.Path(targetPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val target = new org.apache.hadoop.fs.Path(targetPath)
-          val stage = new org.apache.hadoop.fs.Path(targetPath + "__stage")
-          val old = new org.apache.hadoop.fs.Path(targetPath + "__old")
-          recoverUpsertTarget(fs, targetPath)
+          val swap = graft.ops.DirSwap(spark, targetPath)
+          swap.recover()
           val merged =
-            if (fs.exists(target))
+            if (swap.fs.exists(swap.target))
               graft.sinks.Sinks.upsert(
                 spark.read.parquet(targetPath), compacted, keyCols)
             else compacted
           // stage first: the merged plan READS targetPath, so overwriting
           // it in place would clobber the job's own input mid-write
-          merged.write.mode("overwrite").parquet(stage.toString)
-          // swap: retire current state, promote the stage, drop the retiree
-          // — never a window where neither generation exists on disk
-          if (fs.exists(target))
-            require(fs.rename(target, old), s"retire failed: $target")
-          require(fs.rename(stage, target),
-            s"staged-state rename failed: $stage -> $target")
-          fs.delete(old, true)
-          ()
+          merged.write.mode("overwrite").parquet(swap.stage.toString)
+          swap.commit()
         }
       }
       .start()
-
-  /** Crash recovery for [[upsertParquetSink]]'s swap: if a previous run
-    * died mid-swap, either the retired generation (`__old`) still holds
-    * the state (target missing -> restore it) or it is a fully-superseded
-    * leftover (target present -> drop it). A leftover stage dir is always
-    * a partial write (its content replays from the checkpoint) -> drop. */
-  private[graft] def recoverUpsertTarget(
-      fs: org.apache.hadoop.fs.FileSystem, targetPath: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    val stage = new org.apache.hadoop.fs.Path(targetPath + "__stage")
-    val old = new org.apache.hadoop.fs.Path(targetPath + "__old")
-    if (fs.exists(old)) {
-      if (!fs.exists(target))
-        require(fs.rename(old, target), s"state restore failed: $old")
-      else fs.delete(old, true)
-    }
-    fs.delete(stage, true)
-  }
 
   /** Streaming CORPUS ingestion with incremental near-dup dedup: every
     * micro-batch of documents dedups against the persisted MinHash index

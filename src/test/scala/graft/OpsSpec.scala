@@ -759,6 +759,22 @@ class DedupSpec extends SparkSpec {
     assert(recovered == direct, "reader must restore the retired generation")
   }
 
+  test("estimateSourceOverlap leaves a concurrent writer's in-flight signatures__stage in place") {
+    val docs = Seq(("a", "the quick brown fox jumps over the lazy dog"),
+      ("b", "the quick brown fox jumps over a sleeping cat"))
+      .toDF("source", "text")
+    val root = java.nio.file.Files.createTempDirectory("sig_reader").toString
+    Dedup.writeSourceSignatures(spark, root, docs, "source", "text")
+    // a writer's stage, written but not yet committed
+    val stage = s"$root/signatures__stage"
+    spark.read.parquet(s"$root/signatures").write.parquet(stage)
+    Dedup.estimateSourceOverlap(spark, root).collect()
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(stage)),
+      "a reader must not delete a writer's stage")
+  }
+
   test("rareNgramPairs: df cap drops boilerplate grams, minShared prunes weak links") {
     // d1/d2 are exact copies (share every trigram); d3 shares exactly ONE
     // trigram with them (below minShared=2); ten boilerplate docs share a

@@ -337,13 +337,13 @@ class StreamingSpec extends SparkSpec {
     // crash between retire and promote: only __old holds the state
     state.write.parquet(s"$dir/t__old")
     state.limit(0).write.parquet(s"$dir/t__stage") // partial stage leftover
-    EventStreams.recoverUpsertTarget(fs, s"$dir/t")
+    graft.ops.DirSwap(spark, s"$dir/t").recover()
     assert(spark.read.parquet(s"$dir/t").count() == 1, "state must be restored")
     assert(!fs.exists(p(s"$dir/t__old")) && !fs.exists(p(s"$dir/t__stage")))
     // crash after promote, before dropping the retiree: __old is superseded
     state.write.parquet(s"$dir/u__old")
     state.union(state).write.parquet(s"$dir/u")
-    EventStreams.recoverUpsertTarget(fs, s"$dir/u")
+    graft.ops.DirSwap(spark, s"$dir/u").recover()
     assert(spark.read.parquet(s"$dir/u").count() == 2, "newer generation wins")
     assert(!fs.exists(p(s"$dir/u__old")))
   }

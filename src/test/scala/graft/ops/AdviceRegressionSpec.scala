@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression pins for advisory findings that live behind
   * package-private surfaces (the driver union-find's primitive map and the
-  * appendable-IVF swap helper) or inside a single expression's evaluation
+  * directory-swap primitive) or inside a single expression's evaluation
   * (the md5 minhash digest buffer); the DataFrame-level findings are
   * pinned in the graft-package specs next to their ops. */
 class AdviceRegressionSpec extends AnyFunSuite {
@@ -38,8 +38,8 @@ class AdviceRegressionSpec extends AnyFunSuite {
     raw.mkdirs(p(s"${root}__stage/marker_new"))
     raw.mkdirs(p(s"${root}__stage/centroids"))
     // play the racing reader: the instant the writer attempts its FIRST
-    // promote (renaming the stage), healRoot has already restored the
-    // retired generation to the target — exactly the advisory's window
+    // promote (renaming the stage), a reader heal has already restored
+    // the retired generation to the target — exactly the advisory's window
     val fs = new FilterFileSystem(raw) {
       private var injected = false
       override def rename(src: Path, dst: Path): Boolean = {
@@ -50,7 +50,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
         super.rename(src, dst)
       }
     }
-    IVF.promoteStaged(fs, root, s"${root}__stage")
+    DirSwap(fs, p(root), p(s"${root}__stage"), p(s"${root}__old")).commit()
     // the staged generation won (not the restored retiree, and not a
     // stage nested INSIDE the retiree — the local-fs copy-fallback mode)
     assert(raw.exists(p(s"$root/marker_new")))
@@ -66,13 +66,13 @@ class AdviceRegressionSpec extends AnyFunSuite {
     // clean swap over a live target
     val r1 = base + "/a"
     raw.mkdirs(p(s"$r1/marker_old")); raw.mkdirs(p(s"${r1}__stage/marker_new"))
-    IVF.promoteStaged(raw, r1, s"${r1}__stage")
+    DirSwap(raw, p(r1), p(s"${r1}__stage"), p(s"${r1}__old")).commit()
     assert(raw.exists(p(s"$r1/marker_new")) && !raw.exists(p(s"${r1}__old")))
     // target absent entirely (first build, or retired by a crashed writer
     // whose __old a reader already healed away): promote lands directly
     val r2 = base + "/b"
     raw.mkdirs(p(s"${r2}__stage/marker_new"))
-    IVF.promoteStaged(raw, r2, s"${r2}__stage")
+    DirSwap(raw, p(r2), p(s"${r2}__stage"), p(s"${r2}__old")).commit()
     assert(raw.exists(p(s"$r2/marker_new")) && !raw.exists(p(s"${r2}__stage")))
   }
 
