@@ -37,33 +37,37 @@ import org.apache.spark.sql.SparkSession
   * `commit` trusts neither outcome: each round first pulls a nested
   * stage back out, and a promote counts only when no nested stage is
   * left. A losing heal's rename can nest the retiree the same way;
-  * `heal` drops that copy. A stage that is gone when a round begins was
-  * promoted by a concurrent commit of the same stage (the IVF centroid
-  * promote runs on the read path): `commit` heals and requires a
-  * target.
+  * `heal` drops that copy.
+  *
+  * Only the writer commits. A commit that finds no stage when it
+  * begins throws: it cannot tell a stage a crashed run already
+  * promoted from one a second writer's `recover` deleted. Readers of
+  * the IVF centroid file may also finish a crashed split through
+  * [[settle]], which only ever moves a complete stage into a missing
+  * target; from its second round on, a commit whose stage is gone and
+  * whose target exists takes the stage as promoted that way. No reader
+  * ever retires a target, so with one writer per target the retiree a
+  * commit deletes is always the one it retired.
   *
   * The sites keep their own on-disk names: `__stage`/`__old` (the
   * streaming upsert sink, partitioned compaction, the source-signature
   * store, the IVF index root), `__staging`/`__old` (the pipeline's
   * warehouse load), `__migrate_stage`/`__old` (the incremental-dedup
-  * label migration), `centroids__split`/`centroids__retired` (the IVF
-  * list split) and `<table>__compact_stage` (a shard-store tier, which
-  * is only ever promoted into an absent directory, so its retiree is
-  * never created). */
+  * label migration) and `centroids__split`/`centroids__retired` (the
+  * IVF list split). A shard-store tier is only ever moved into an
+  * absent directory, so it has no retiree and uses
+  * [[DirSwap.promoteInto]]. */
 private[graft] final case class DirSwap(fs: FileSystem, target: Path,
     stage: Path, retiree: Path) {
 
   /** Where a rename into an existing `target` directory puts `p`. */
   private def nestedIn(p: Path): Path = new Path(target, p.getName)
 
-  /** A rename whose source a concurrent heal or commit moved first
-    * reports false (Hadoop's local filesystem throws instead). */
-  private def move(src: Path, dst: Path): Boolean =
-    try fs.rename(src, dst) catch { case _: FileNotFoundException => false }
+  private def move(src: Path, dst: Path) = DirSwap.promoteInto(fs, src, dst)
 
-  /** Retire `target`, promote `stage`, drop the retiree; a stage
-    * already promoted makes this a heal. Throws after
-    * [[DirSwap.MaxRounds]] promotes lost to reader heals. */
+  /** Retire `target`, promote `stage`, drop the retiree. Throws when
+    * there is no stage to commit, and after [[DirSwap.MaxRounds]]
+    * promotes lost to reader heals. */
   def commit(): Unit = promote(1)
 
   @tailrec private def promote(round: Int): Unit = {
@@ -72,8 +76,11 @@ private[graft] final case class DirSwap(fs: FileSystem, target: Path,
       require(move(nested, stage) || fs.exists(stage),
         s"stage recovery failed: $nested")
     if (!fs.exists(stage)) {
+      // round 1: nothing was staged; later: a reader settled the stage
+      // into the target this commit had retired
+      val settled = round > 1 && fs.exists(target)
       heal()
-      require(fs.exists(target), s"promote failed: no $stage or $target")
+      require(settled, s"promote failed: no $stage to commit into $target")
     } else if (round > DirSwap.MaxRounds)
       throw new IllegalStateException(s"promote of $stage lost to reader " +
         s"heals ${DirSwap.MaxRounds} times; the live generation is at " +
@@ -103,6 +110,17 @@ private[graft] final case class DirSwap(fs: FileSystem, target: Path,
       }
     }
 
+  /** Reader side of a swap whose readers finish a crashed commit: a
+    * stage holding `_SUCCESS` (Spark's committer writes it last) moves
+    * into a missing target, then [[heal]]. A target that exists is never
+    * retired here, so a complete stage beside it waits for the writer. */
+  def settle(): Unit = {
+    if (!fs.exists(target) && fs.exists(new Path(stage, "_SUCCESS")) &&
+        !move(stage, target))
+      require(fs.exists(target), s"settle failed: $stage")
+    heal()
+  }
+
   /** Writer side: [[heal]], then delete the stale stage, wherever a
     * crashed commit left it. */
   def recover(): Unit = {
@@ -118,6 +136,14 @@ private[graft] object DirSwap {
     * means a reader healed inside the two-rename window, and three in a
     * row mean something other than readers owns these paths. */
   val MaxRounds = 3
+
+  /** Rename the directory `src` to the absent `dst`; false when the
+    * rename did not happen, also when a concurrent heal or commit moved
+    * `src` first (Hadoop's local filesystem throws instead). On a
+    * filesystem that renames into an existing directory, a `dst` that
+    * appeared meanwhile receives `src` as a child. */
+  def promoteInto(fs: FileSystem, src: Path, dst: Path): Boolean =
+    try fs.rename(src, dst) catch { case _: FileNotFoundException => false }
 
   /** The swap of the directory at `path` with its siblings
     * `path + stageSuffix` and `path + retireSuffix`, on the filesystem

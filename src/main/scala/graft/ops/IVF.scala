@@ -299,13 +299,13 @@ object IVF {
 
   /** The frozen centroids an appendable index was built with. Heals a
     * crashed rebuild swap first (and settles a [[splitList]] centroid
-    * swap — see [[settleCentroids]]), so every read path (and
+    * swap — see [[centroidSwap]]), so every read path (and
     * [[appendVectors]], which must assign with these exact centroids)
     * sees a consistent generation. */
   def readModel(spark: org.apache.spark.sql.SparkSession,
       root: String): Model = {
     DirSwap(spark, root).heal()
-    settleCentroids(spark, root)
+    centroidSwap(spark, root).settle()
     Model(spark.read.parquet(s"$root/centroids")
       .orderBy(col("cid")).collect()
       .map(_.getSeq[Double](1).toArray))
@@ -315,24 +315,16 @@ object IVF {
     * of the root swap. The split cannot afford the rebuild's whole-root
     * staging (it must not rewrite the untouched 99% of a 100 TB index to
     * split one list), so only the tiny centroids file swaps, staged in
-    * `centroids__split` and retired to `centroids__retired`. */
+    * `centroids__split` and retired to `centroids__retired`. The read
+    * path [[DirSwap.settle]]s it: a crash between the split's retire
+    * and promote leaves no live file and a complete stage (`_SUCCESS`;
+    * the split's vector copies were written before it — ordering
+    * contract in [[splitList]]), which moves in. Any other state is
+    * only healed: a stage beside a live file is left to the single
+    * writer, whose next `mode=overwrite` stage write replaces it. */
   private def centroidSwap(spark: org.apache.spark.sql.SparkSession,
       root: String): DirSwap =
     DirSwap(spark, s"$root/centroids", "__split", "__retired")
-
-  /** The read path's half of the centroid swap: a stage with `_SUCCESS`
-    * (parquet commits it last) is complete and supersedes the live file
-    * — the split's vector copies were written before it (ordering
-    * contract in [[splitList]]) — so it is committed; otherwise the swap
-    * is only healed, and a torn stage is left to the single writer,
-    * whose next `mode=overwrite` stage write replaces it. */
-  private def settleCentroids(spark: org.apache.spark.sql.SparkSession,
-      root: String): Unit = {
-    val swap = centroidSwap(spark, root)
-    if (swap.fs.exists(new org.apache.hadoop.fs.Path(swap.stage, "_SUCCESS")))
-      swap.commit()
-    else swap.heal()
-  }
 
   /** Ingest a new embedding shard: assign against the PERSISTED centroids
     * (one map-only pass over the shard — the existing index is not read at

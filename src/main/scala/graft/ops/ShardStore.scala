@@ -27,14 +27,13 @@ import org.apache.spark.sql.types.StructType
   * inside the partitioned table would break partition discovery), a
   * `_sources` manifest listing the sources is written into the stage
   * (the leading `_` keeps Spark's file listing from reading it), and
-  * the stage is committed as the tier partition through [[DirSwap]];
-  * then the sources are deleted. The tier is named `compacted_` + the
-  * SHA-256 of the sorted, length-prefixed source names, so two
-  * different source sets never share a name. A re-run that finds its
-  * tier already in place crashed after the commit: it checks the
-  * tier's manifest against the current source list, then only
-  * finishes the deletions. A manifest that does not match fails the
-  * run with `require` and deletes nothing. A tier
+  * the stage is renamed in as the tier partition; then the sources are
+  * deleted. The tier is named `compacted_` + the SHA-256 of the sorted,
+  * length-prefixed source names, so two different source sets never
+  * share a name. A re-run that finds its tier already in place crashed
+  * after the rename: it checks the tier's manifest against the current
+  * source list, then only finishes the deletions. A manifest that does
+  * not match fails the run with `require` and deletes nothing. A tier
   * at or under the threshold is itself a source of the next run, which
   * absorbs any leftover copies through the table's consolidation rule.
   *
@@ -133,19 +132,17 @@ private[ops] object ShardStore {
           s"list the current sources (${sources.mkString(", ")}); refusing " +
           "to delete them")
     } else if (sources.nonEmpty) {
-      // the tier is promoted into an absent directory, so the retiree
-      // is never created
-      val swap = DirSwap(fs, target, new Path(t.path + "__compact_stage"),
-        new Path(t.path + "__compact_old"))
-      swap.recover() // a crashed attempt's stage
+      val stage = new Path(t.path + "__compact_stage")
+      fs.delete(stage, true) // leftover from a crashed attempt
       val w = t.consolidate(spark.read.schema(t.schema).parquet(t.path)
           .filter(col(ShardCol).isin(sources: _*)).drop(ShardCol))
         .write.mode("overwrite")
       (if (t.nested.isEmpty) w else w.partitionBy(t.nested: _*))
-        .parquet(swap.stage.toString)
-      val out = fs.create(new Path(swap.stage, ManifestName), true)
+        .parquet(stage.toString)
+      val out = fs.create(new Path(stage, ManifestName), true)
       try out.write(manifest.getBytes(UTF_8)) finally out.close()
-      swap.commit()
+      require(DirSwap.promoteInto(fs, stage, target),
+        s"compact promote failed: $stage")
     }
   }
 
